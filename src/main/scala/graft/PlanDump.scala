@@ -1,6 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 /** Dump `.explain("formatted")` for the named queries (or all) to one
   * file per query — the optimization rounds' plan evidence
@@ -32,17 +36,28 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    // "exec" as a 4th arg: run the query (collect) and dump the FINAL
-    // adaptive plan instead of the initial one — this is where
-    // ReusedExchange / AQE join rewrites are visible.
+    // "exec" as a 4th arg: run the query (a noop write, as Bench does)
+    // and dump the write's FINAL adaptive plan instead of the initial
+    // one — this is where ReusedExchange / AQE join rewrites are visible.
+    // Listener events arrive asynchronously; the write's is awaited.
     val execMode = args.length > 3 && args(3) == "exec"
+    val written = new LinkedBlockingQueue[QueryExecution]()
+    if (execMode) spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.isInstanceOf[V2TableWriteExec]) written.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        if (execMode) df.collect()
-        val plan = if (execMode) df.queryExecution.executedPlan.toString
-          else df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+        val plan = if (execMode) {
+          written.clear()
+          df.write.format("noop").mode("overwrite").save()
+          Option(written.poll(60, TimeUnit.SECONDS))
+            .getOrElse(sys.error("the write's plan did not arrive within 60 s"))
+            .executedPlan.toString
+        } else df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
         println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
       } catch { case e: Throwable =>

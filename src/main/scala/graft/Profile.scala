@@ -1,7 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-query phase profile (guide §1: measure first): splits a query's
   * wall time into driver-side planning (analysis→executedPlan) vs
@@ -9,6 +7,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * schedules — the fixed-overhead fingerprint that dominates small-SF
   * benches (a query that runs 9 jobs because its operator collects
   * vocab tables pays 9 scheduling rounds regardless of data size).
+  * `cjobs` counts the jobs run while the DataFrame is built and planned;
+  * `jobs`, `stages`, `tasks` and `spill_mb` those of the first execution
+  * (counted by [[JobCounter]]).
   *
   * Usage: runMain graft.Profile [q_a,q_b,...]
   */
@@ -25,61 +26,41 @@ object Profile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val spillMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(sc.stageInfo.numTasks)
-        // spill audit (guide §5): bytes the stage's tasks spilled
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-
     val names = if (args.nonEmpty)
       args(0).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     else SparkEntry.queries.keys.toSeq.sorted
-    // warm-up: JVM + parquet footers
-    try SparkEntry.queries("q_agg")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
 
     def resetStorage(): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       System.gc()
     }
+    def timed[A](body: => A): (A, Double) = {
+      val t0 = System.nanoTime()
+      val r = body
+      (r, (System.nanoTime() - t0) / 1e9)
+    }
+    def write(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
 
-    println(f"${"query"}%-28s ${"plan_s"}%8s ${"exec1_s"}%8s ${"exec2_s"}%8s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"spill_mb"}%9s")
+    try write(SparkEntry.queries("q_agg")(spark, sfDir))
+    catch { case _: Throwable => () }
+
+    println(f"${"query"}%-28s ${"plan_s"}%8s ${"exec1_s"}%8s ${"exec2_s"}%8s ${"cjobs"}%5s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"spill_mb"}%9s")
     names.foreach { name =>
       try {
         resetStorage()
-        // NOTE: operators that collect (vocab/centroids) run jobs during
-        // DataFrame *construction*; charge that to plan_s and count its jobs.
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.queryExecution.executedPlan // force analysis+optimization+planning
-        val t1 = System.nanoTime()
-        jobs.set(0); stages.set(0); tasks.set(0)
-        spillMem.set(0); spillDisk.set(0)
-        df.write.format("noop").mode("overwrite").save()
-        val t2 = System.nanoTime()
-        val (j1, s1, k1) = (jobs.get, stages.get, tasks.get)
-        val sp = (spillMem.get + spillDisk.get) / 1e6
+        // operators that collect (vocab/centroids) run jobs while the
+        // DataFrame is built: their time is in plan_s, their jobs in cjobs
+        val ((df, planS), built) = JobCounter(spark.sparkContext)(timed {
+          val d = SparkEntry.queries(name)(spark, sfDir)
+          d.queryExecution.executedPlan // force analysis+optimization+planning
+          d
+        })
+        val ((_, exec1S), ran) = JobCounter(spark.sparkContext)(timed(write(df)))
         resetStorage()
-        val t3 = System.nanoTime()
-        val df2 = SparkEntry.queries(name)(spark, sfDir)
-        df2.write.format("noop").mode("overwrite").save()
-        val t4 = System.nanoTime()
-        println(f"$name%-28s ${(t1 - t0) / 1e9}%8.3f ${(t2 - t1) / 1e9}%8.3f ${(t4 - t3) / 1e9}%8.3f $j1%5d $s1%7d $k1%6d $sp%9.1f")
+        val (_, exec2S) = timed(write(SparkEntry.queries(name)(spark, sfDir)))
+        println(f"$name%-28s $planS%8.3f $exec1S%8.3f $exec2S%8.3f ${built.jobs}%5d ${ran.jobs}%5d ${ran.stages}%7d ${ran.tasks}%6d ${ran.spillBytes / 1e6}%9.1f")
       } catch { case e: Throwable =>
         println(f"$name%-28s FAILED: ${e.getMessage}")
       }

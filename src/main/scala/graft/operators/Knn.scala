@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{classic, Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -649,16 +650,22 @@ object Knn {
     // gaps and stage tails back-fill with the other's tasks (guide
     // §2.6 "overlap independent jobs"). Results are identical: each
     // trainer is deterministic and shares nothing but the immutable
-    // corpus frame.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fCents = scala.concurrent.Future(
-      trainIvfCentroids(corpus, idCol, vecCol, cells, iters))
-    val cb = trainPqCodebooks(corpus, idCol, vecCol, m, ksub, iters)
-    val cents = scala.concurrent.Await.result(
-      fCents, scala.concurrent.duration.Duration.Inf)
-    ivfPqTopKWith(cents, cb,
-      queries, corpus, idCol, vecCol, k, probes, excludeSelf)
+    // corpus frame. The centroid trainer runs on a thread of its own
+    // that carries the caller's SparkContext local properties (job
+    // group, tags, scheduler pool) and active session, and it is awaited
+    // even when the PQ trainer throws, so no trainer job outlives the call.
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val fCents = SQLExecution.withThreadLocalCaptured(
+        corpus.sparkSession.asInstanceOf[classic.SparkSession], pool)(
+        trainIvfCentroids(corpus, idCol, vecCol, cells, iters))
+      val cb = try trainPqCodebooks(corpus, idCol, vecCol, m, ksub, iters)
+        finally fCents.handle[Unit]((_, _) => ()).join()
+      val cents = try fCents.join()
+        catch { case e: java.util.concurrent.CompletionException => throw e.getCause }
+      ivfPqTopKWith(cents, cb,
+        queries, corpus, idCol, vecCol, k, probes, excludeSelf)
+    } finally pool.shutdown()
   }
 
   /** [[ivfPqTopK]] with already-trained models — the persisted-index

@@ -147,8 +147,14 @@ def main():
 if __name__ == "__main__":
     if "--check" in sys.argv:
         def opt(flag):
-            return (int(sys.argv[sys.argv.index(flag) + 1])
-                    if flag in sys.argv else None)
+            if flag not in sys.argv:
+                return None
+            try:
+                return int(sys.argv[sys.argv.index(flag) + 1])
+            except (IndexError, ValueError):
+                print("usage: query_index.py --check [--tests N --suites M]",
+                      file=sys.stderr)
+                sys.exit(2)
         check(tests=opt("--tests"), suites=opt("--suites"))
     else:
         main()
