@@ -95,9 +95,12 @@ final class NngPair private[net] (socket: Socket, in: DataInputStream,
 
 object NngPair {
   /** Dial tcp://host:port (the reference's eKuiper side: it DIALS the
-    * neuron daemon's listening pair socket).
+    * neuron daemon's listening pair socket). A `handler` given here is
+    * registered before the reader starts, so a message the peer sends
+    * as soon as it sees the connection is not read with no handler and
+    * lost; `onMessage` after `dial` cannot promise that.
     */
-  def dial(url: String): NngPair = {
+  def dial(url: String, handler: (NngPair, Array[Byte]) => Unit = null): NngPair = {
     val uri = java.net.URI.create(url.stripPrefix("nng+"))
     val socket = new Socket()
     socket.setTcpNoDelay(true)
@@ -107,6 +110,7 @@ object NngPair {
     try {
       Nng.handshake(in, out, Nng.PairProtocol)
       val p = new NngPair(socket, in, out)
+      if (handler != null) p.onMessage(handler(p, _))
       p.startReader(s"nng-pair-dial-${uri.getPort}")
       p
     } catch {

@@ -565,20 +565,18 @@ object PortableWorker {
             // to the consumer, acked ok/error (reference SDK sink loop)
             sinks.get(symbol).zip(sinkUrls.get(symbol)).foreach {
               case (consumer, url) =>
-                val chan = NngPair.dial(url)
-                open.add(chan)
-                chan.onMessage { payload =>
+                // the engine sends as soon as it sees the dial: register
+                // the consumer before the reader starts
+                open.add(NngPair.dial(url, { (chan, payload) =>
                   val reply =
                     try { consumer(payload); "ok" }
                     catch { case e: Exception => s"error:${e.getMessage}" }
                   chan.send(reply.getBytes("UTF-8"))
-                }
+                }))
             }
           } else handlers.get(symbol).zip(funcUrls.get(symbol)).foreach {
             case (handler, url) =>
-              val chan = NngPair.dial(url)
-              open.add(chan)
-              chan.onMessage { req =>
+              open.add(NngPair.dial(url, { (chan, req) =>
                 val reply =
                   try {
                     val data = JsonMethods.parse(new String(req, "UTF-8"))
@@ -603,7 +601,7 @@ object PortableWorker {
                         "result" -> JString(String.valueOf(e.getMessage)))
                   }
                 chan.send(JsonMethods.compact(JsonMethods.render(reply)).getBytes("UTF-8"))
-              }
+              }))
           }
           control.send("ok".getBytes("UTF-8"))
         case JString("stop") => control.send("ok".getBytes("UTF-8"))

@@ -929,7 +929,7 @@ object RuleApi {
     * the engine genuinely measures are exported — input records, not
     * a fabricated sink-out count), plus a graft-specific batches
     * counter and state gauge (1 running/scheduled, 0 created/stopped,
-    * -1 failed).
+    * -1 failed), and each streaming rule's last micro-batch phase times.
     */
   private[rules] def prometheusText(engine: RuleEngine): String = {
     // label values: escape backslash, double-quote, newline (exposition
@@ -963,8 +963,20 @@ object RuleApi {
         case RuleState.Failed(_) => -1L
         case _ => 0L
       })
+    // streaming rules only, and only the phases Spark reported for the
+    // last micro-batch (a batch without data has no addBatch or commits)
+    val phases = engine.list.map(id => id -> engine.lastBatchPhases(id))
+    sb.append("# HELP graft_rule_batch_phase_ms Phase time of the rule's last micro-batch, " +
+      "from StreamingQueryProgress.durationMs (slowest of the rule's queries)\n")
+    sb.append("# TYPE graft_rule_batch_phase_ms gauge\n")
+    for ((id, ms) <- phases; phase <- BatchPhases; v <- ms.get(phase))
+      sb.append(s"""graft_rule_batch_phase_ms{rule="${esc(id)}",phase="$phase"} $v\n""")
     sb.toString
   }
+
+  /** Micro-batch phases `graft_rule_batch_phase_ms` exports. */
+  private val BatchPhases =
+    Seq("latestOffset", "addBatch", "walCommit", "commitOffsets", "triggerExecution")
 
   /** Async task registry (reference internal/pkg/async AsyncManager:
     * id → status/message with created/updated stamps).

@@ -208,14 +208,11 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
     * literal substitution reproduces the reference's context values.
     */
   private def sparkSql(rule: Rule, referenced: Seq[String]): String = {
-    val translated =
-      if (EkuiperSql.isEkuiperDialect(rule.sql)) {
-        val tsCol = referenced.flatMap(n => catalog.get(n).flatMap(_.timestampCol))
-          .headOption.getOrElse("ts")
-        EkuiperSql.translate(rule.sql, tsCol)
-      } else rule.sql
     val tsCol = referenced.flatMap(n => catalog.get(n).flatMap(_.timestampCol))
       .headOption.getOrElse("ts")
+    val translated =
+      if (EkuiperSql.isEkuiperDialect(rule.sql)) EkuiperSql.translate(rule.sql, tsCol)
+      else rule.sql
     val substituted = EkuiperSql.mapOutsideLiterals(translated) { seg =>
       var s = seg
       s = """(?i)\brule_id\s*\(\s*\)""".r.replaceAllIn(s,
@@ -301,8 +298,9 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
     }
     val sql = sparkSql(rule, referenced)
     rule.sinks.zipWithIndex.map { case (sink, i) =>
-      val w = withWm.writeStream.queryName(ownedQueryName(rule.id, s"${rule.id}_$i"))
-        .foreachBatch { (b: DataFrame, _: Long) =>
+      Sink.startQuery(withWm, ownedQueryName(rule.id, s"${rule.id}_$i"), rule.triggerMs,
+          rule.checkpointDir.map(c => s"$c/$i"))(
+        _.foreachBatch { (b: DataFrame, _: Long) =>
           // micro-batches run in a cloned session — register and plan
           // there, not in the outer session's catalog
           val sess = b.sparkSession
@@ -310,11 +308,7 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
           tables.foreach(t =>
             catalog.get(t).get.source.batch(sess).createOrReplaceTempView(t))
           sink.deliver(sess.sql(sql))
-        }
-      val w2 = if (rule.triggerMs > 0)
-        w.trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(rule.triggerMs))
-      else w
-      rule.checkpointDir.fold(w2)(c => w2.option("checkpointLocation", s"$c/$i")).start()
+        })
     }
   }
 
@@ -524,6 +518,17 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
          rr + p.map(_.numInputRows).getOrElse(0L))
     }
     RuleStatus(id, slot.state, b, r)
+  }
+
+  /** Phase times (`StreamingQueryProgress.durationMs`) of the rule's
+    * last micro-batch, per phase the slowest of its queries (one per
+    * sink); empty for a batch rule and before the first micro-batch.
+    */
+  private[rules] def lastBatchPhases(id: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    lookup(id).queries.flatMap(q => Option(q.lastProgress))
+      .flatMap(_.durationMs.asScala)
+      .groupMapReduce(_._1)(_._2.longValue)(math.max)
   }
 
   /** The reference's EXPLAIN endpoint: the Catalyst plan the rule

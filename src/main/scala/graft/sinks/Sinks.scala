@@ -1,8 +1,9 @@
 package graft.sinks
 
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Sink abstraction (SURVEY §2.7). Mirrors the reference's sink
   * contract (docs/en_US/guide/sinks): every sink receives each result
@@ -77,16 +78,27 @@ trait Sink {
     * per-sink logic identical in both modes.
     */
   def writeStream(df: DataFrame, queryName: String,
-                  triggerMs: Long = 0, checkpoint: Option[String] = None): StreamingQuery = {
-    val w = df.writeStream.queryName(queryName)
-      .outputMode(options.getOrElse("outputMode", "append"))
-      .foreachBatch((b: DataFrame, _: Long) => deliver(b))
-    val w2 = if (triggerMs > 0) w.trigger(Trigger.ProcessingTime(triggerMs)) else w
-    checkpoint.fold(w2)(c => w2.option("checkpointLocation", c)).start()
-  }
+                  triggerMs: Long = 0, checkpoint: Option[String] = None): StreamingQuery =
+    Sink.startQuery(df, queryName, triggerMs, checkpoint)(
+      _.outputMode(options.getOrElse("outputMode", "append"))
+        .foreachBatch((b: DataFrame, _: Long) => deliver(b)))
 }
 
 object Sink {
+  /** Start a streaming query. Every graft start site goes through here,
+    * so each gets the same trigger and checkpoint wiring, and each runs
+    * its checkpoint on [[graft.streaming.LocalCheckpointFileManager]]
+    * unless the session names its own manager. `wire` adds the output
+    * mode and the sink.
+    */
+  def startQuery(df: DataFrame, queryName: String, triggerMs: Long, checkpoint: Option[String])
+                (wire: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    LocalCheckpointFileManager.install(df.sparkSession)
+    val w = wire(df.writeStream.queryName(queryName))
+    val timed = if (triggerMs > 0) w.trigger(Trigger.ProcessingTime(triggerMs)) else w
+    checkpoint.fold(timed)(c => timed.option("checkpointLocation", c)).start()
+  }
+
   /** Split "a {{b}} c" into Left(literal) / Right(fieldName) parts. */
   def templateParts(tpl: String): Seq[Either[String, String]] = {
     val re = "\\{\\{\\s*([A-Za-z0-9_.]+)\\s*\\}\\}".r

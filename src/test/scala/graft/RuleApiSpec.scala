@@ -387,6 +387,38 @@ class RuleApiSpec extends SparkSuite {
       s"missing state gauge in:\n$body")
   }
 
+  test("prometheus metrics: a streaming rule's last micro-batch phase times") {
+    val dir = Files.createTempDirectory("graft_phase_in")
+    val ckpt = Files.createTempDirectory("graft_phase_ck")
+    Files.write(dir.resolve("a.json"), """{"x":1}""".getBytes)
+    val eng = new RuleEngine(spark)
+    val a = new RuleApi(eng)
+    a.handle("POST", "/streams",
+      s"""{"sql": "CREATE STREAM phase_in (x BIGINT) WITH (TYPE=\\"file\\", FORMAT=\\"json\\", DATASOURCE=\\"$dir\\")"}""")
+    a.handle("POST", "/rules",
+      s"""{"id":"r_phase","sql":"SELECT x FROM phase_in","streaming":true,
+         | "actions":[{"nop":{}}],"options":{"checkpoint":"$ckpt"}}""".stripMargin)
+    a.handle("POST", "/rules",
+      """{"id":"r_phase_batch","sql":"SELECT x FROM phase_in","actions":[{"nop":{}}]}""")
+    a.handle("POST", "/rules/r_phase/start")
+    a.handle("POST", "/rules/r_phase_batch/start")
+    try {
+      eng.processAllAvailable("r_phase")
+      val (code, body) = a.handle("GET", "/metrics/prometheus")
+      assert(code == 200)
+      val lines = body.split('\n').toSeq
+      assert(lines.contains("# TYPE graft_rule_batch_phase_ms gauge"))
+      val phase = """graft_rule_batch_phase_ms\{rule="([^"]+)",phase="(\w+)"\} (\d+)""".r
+      val got = lines.collect { case phase(rule, p, ms) => (rule, p) -> ms.toLong }.toMap
+      // the data batch reports every phase; the batch rule runs none
+      assert(got.keySet == Seq("latestOffset", "addBatch", "walCommit", "commitOffsets",
+        "triggerExecution").map("r_phase" -> _).toSet, body)
+      val last = spark.streams.active.find(_.name == "r_phase_0").get.lastProgress
+      assert(got(("r_phase", "triggerExecution")) == last.durationMs.get("triggerExecution"))
+      assert(got(("r_phase", "addBatch")) <= got(("r_phase", "triggerExecution")))
+    } finally a.handle("POST", "/rules/r_phase/stop")
+  }
+
   test("cron-scheduled rule JSON (reference cron + duration options) is accepted") {
     val dir = Files.createTempDirectory("graft_cron_in")
     Files.write(dir.resolve("a.json"), """{"x":3}""".getBytes)

@@ -712,6 +712,67 @@ class RulesSpec extends SparkSuite {
       "checkpoint restart must deliver exactly the unseen rows")
   }
 
+  test("stateful window rule resumes on a checkpoint Spark's default manager wrote") {
+    import graft.streaming.LocalCheckpointFileManager
+    import LocalCheckpointFileManager.ConfKey
+    val dir = Files.createTempDirectory("graft_resume_in")
+    val ckpt = Files.createTempDirectory("graft_resume_ck")
+    val streamed = Files.createTempDirectory("graft_resume_out")
+    val batched = Files.createTempDirectory("graft_resume_batch")
+    // one event per device every 3 s; the flush event's late timestamp
+    // moves the watermark past every data window
+    def events(secs: Range): Seq[String] = for (s <- secs; d <- Seq("a", "b")) yield
+      f"""{"device":"$d","temp":${s % 7 + 1},"ts":"2024-01-01T00:${s / 60}%02d:${s % 60}%02dZ"}"""
+    val sql = """SELECT device, count(*) AS n, sum(temp) AS total, window_start() AS ws
+                |FROM rs GROUP BY device, TUMBLINGWINDOW(ss, 10)""".stripMargin
+    def engine(): RuleEngine = {
+      val e = new RuleEngine(spark)
+      e.createStream(
+        s"""CREATE STREAM rs (device STRING, temp BIGINT, ts TIMESTAMP) WITH
+           | (TYPE="file", FORMAT="json", DATASOURCE="$dir",
+           |  TIMESTAMP="ts", WATERMARK="5 seconds")""".stripMargin)
+      e
+    }
+    def runStreaming(): Unit = {
+      val e = engine()
+      e.create(Rule("rs1", sql, Seq(FileSink(streamed.toString)),
+        streaming = true, checkpointDir = Some(ckpt.toString)))
+      try { e.start("rs1"); e.processAllAvailable("rs1") } finally { e.stop("rs1"); e.close() }
+    }
+    def lines(d: java.nio.file.Path): Seq[String] =
+      spark.read.text(d.toString).collect().map(_.getString(0)).filterNot(_.contains("flush")).sorted.toSeq
+    val previous = spark.conf.getOption(ConfKey)
+    try {
+      // first run: Spark's default manager writes the checkpoint (with
+      // Hadoop's .crc files) and leaves the 30-40 s window in state
+      spark.conf.set(ConfKey,
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
+      writeJson(dir, events(0 until 36 by 3))
+      runStreaming()
+      assert(Files.walk(ckpt).anyMatch(_.getFileName.toString.endsWith(".crc")))
+      val firstRun = lines(streamed)
+      assert(firstRun.nonEmpty && !firstRun.exists(_.contains("00:00:30")), firstRun)
+      // second run: graft's manager resumes from that checkpoint
+      spark.conf.unset(ConfKey)
+      Files.write(dir.resolve("part-1.json"),
+        (events(36 until 70 by 3) :+
+          """{"device":"flush","temp":0,"ts":"2024-01-01T00:05:00Z"}""").mkString("\n").getBytes("UTF-8"))
+      runStreaming()
+      assert(spark.conf.get(ConfKey) == classOf[LocalCheckpointFileManager].getName)
+      // the batches of the second run were logged without .crc files
+      val offsets = ckpt.resolve("0/offsets")
+      val lastBatch = offsets.toFile.list().filter(_.forall(_.isDigit)).map(_.toInt).max
+      assert(!Files.exists(offsets.resolve(s".$lastBatch.crc")) &&
+        Files.exists(offsets.resolve(".0.crc")))
+      val e = engine()
+      e.create(Rule("rs_batch", sql, Seq(FileSink(batched.toString))))
+      e.start("rs_batch")
+      e.close()
+      assert(lines(batched).size == 14) // 7 windows x 2 devices
+      assert(lines(streamed) == lines(batched))
+    } finally previous.fold(spark.conf.unset(ConfKey))(spark.conf.set(ConfKey, _))
+  }
+
   test("schemaless CREATE STREAM infers the schema from existing files") {
     val dir = Files.createTempDirectory("graft_schemaless")
     writeJson(dir, Seq("""{"device":"a","temp":12}""", """{"device":"b","temp":30}"""))
