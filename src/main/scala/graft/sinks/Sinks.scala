@@ -1,6 +1,7 @@
 package graft.sinks
 
-import graft.streaming.LocalCheckpointFileManager
+import graft.streaming.{LocalCheckpointFileManager, LocalFiles}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -130,6 +131,20 @@ object Sink {
   *    (size-capped part files aren't expressible natively).
   *  - `compression`: writer codec (gzip/zstd/…; zlib/flate map to
   *    Hadoop's deflate).
+  *
+  * Two write paths, one output. A JSON batch appended to a directory on
+  * `file:` (no `partitionBy`, no `compression`) goes through
+  * [[JsonLineWriter]]: each partition writes its `to_json` lines into
+  * its own part files with `java.nio`, byte for byte what Spark's JSON
+  * writer writes, and publishes each file by an atomic rename. Spark's
+  * `DataFrameWriter` would ship the session's whole Hadoop
+  * `Configuration` in every write task, run Hadoop's commit protocol
+  * (`_temporary` directories, renames, `.crc` and `_SUCCESS` files) and,
+  * without the native `libhadoop`, fork `chmod` for every file it
+  * creates — per micro-batch of every streaming rule. Every other write
+  * (csv, parquet, `partitionBy`, `compression`, another `mode`, another
+  * scheme, or a schema Spark's JSON writer rejects) goes through
+  * `DataFrameWriter` as before.
   */
 final case class FileSink(path: String, format: String = "json",
                           options: Map[String, String] = Map.empty) extends Sink {
@@ -164,21 +179,55 @@ final case class FileSink(path: String, format: String = "json",
 
   def writeBatch(df: DataFrame): Unit = {
     val shapedDf = shaped(df)
-    var w = shapedDf.write.mode(options.getOrElse("mode", "append"))
-    options.get("rollingCount").foreach(n => w = w.option("maxRecordsPerFile", n))
-    options.get("rollingSize").foreach { bytes =>
-      // bounded sample (<=100 rows on the driver) → avg row width →
-      // per-file row cap approximating the byte cap. Sampled on the
-      // first batch and refreshed every Nth after that — re-sampling
-      // EVERY micro-batch would run an extra Spark job per write.
-      val n = batchCounter.getAndIncrement()
-      if (sizeCap < 0 || n % FileSink.RollResampleEvery == 0) {
-        val sample = shapedDf.limit(100).toJSON.collect()
-        val avg = if (sample.isEmpty) 1 else math.max(1, sample.map(_.length).sum / sample.length)
-        if (!sample.isEmpty || sizeCap < 0) sizeCap = math.max(1L, bytes.toLong / avg)
-      }
-      w = w.option("maxRecordsPerFile", sizeCap)
+    val maxRecords = options.get("rollingSize").map(rollingSizeCap(shapedDf, _))
+      .orElse(options.get("rollingCount").map(_.toLong))
+    val target = rollTarget(System.currentTimeMillis())
+    lineTarget(shapedDf, target) match {
+      case Some(dir) => JsonLineWriter.write(shapedDf, dir, maxRecords.getOrElse(
+        shapedDf.sparkSession.conf.get("spark.sql.files.maxRecordsPerFile").toLong))
+      case None => writeWithSpark(shapedDf, target, maxRecords)
     }
+  }
+
+  /** The rollingSize row cap: a bounded sample (<=100 rows on the
+    * driver) gives the average row width, and `bytes` over it the
+    * per-file row cap approximating the byte cap. Sampled on the first
+    * batch and refreshed every Nth after that — re-sampling EVERY
+    * micro-batch would run an extra Spark job per write.
+    */
+  private def rollingSizeCap(shapedDf: DataFrame, bytes: String): Long = {
+    val n = batchCounter.getAndIncrement()
+    if (sizeCap < 0 || n % FileSink.RollResampleEvery == 0) {
+      val sample = shapedDf.limit(100).toJSON.collect()
+      val avg = if (sample.isEmpty) 1 else math.max(1, sample.map(_.length).sum / sample.length)
+      if (!sample.isEmpty || sizeCap < 0) sizeCap = math.max(1L, bytes.toLong / avg)
+    }
+    sizeCap
+  }
+
+  /** The local directory the line writer appends this batch to, when it
+    * can write it as Spark's writer would: JSON, append mode, no
+    * partition columns, no compression, a schema Spark's JSON writer
+    * accepts, and a target on `file:` (by its scheme, or else by the
+    * session's `fs.defaultFS`, as Spark's writer resolves it).
+    */
+  private def lineTarget(shapedDf: DataFrame, target: String): Option[java.nio.file.Path] = {
+    val spark = shapedDf.sparkSession
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val path = new Path(target)
+    def defaultFs = spark.conf.getOption(FileSystem.FS_DEFAULT_NAME_KEY)
+      .fold(FileSystem.getDefaultUri(hadoop))(java.net.URI.create)
+    val plain = format == "json" && options.getOrElse("mode", "append").equalsIgnoreCase("append") &&
+      !options.contains("partitionBy") && !options.contains("compression")
+    if (plain && LocalFiles.isLocal(path, defaultFs) &&
+        JsonLineWriter.accepts(shapedDf.schema, spark.conf.get("spark.sql.caseSensitive").toBoolean))
+      Some(java.nio.file.Paths.get(FileSystem.getLocal(hadoop).makeQualified(path).toUri))
+    else None
+  }
+
+  private def writeWithSpark(shapedDf: DataFrame, target: String, maxRecords: Option[Long]): Unit = {
+    var w = shapedDf.write.mode(options.getOrElse("mode", "append"))
+    maxRecords.foreach(n => w = w.option("maxRecordsPerFile", n))
     options.get("compression").foreach { c =>
       val codec = c match {
         case "zlib" | "flate" => "deflate" // Hadoop's DEFLATE codec family
@@ -188,7 +237,6 @@ final case class FileSink(path: String, format: String = "json",
     }
     val w2 = options.get("partitionBy")
       .fold(w)(p => w.partitionBy(p.split(",").map(_.trim).toIndexedSeq: _*))
-    val target = rollTarget(System.currentTimeMillis())
     format match {
       case "json" => w2.json(target)
       case "csv" => w2.option("header", "true").csv(target)

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.io.BufferedOutputStream
-import java.nio.file.{FileSystemException, Files, NoSuchFileException, StandardCopyOption}
+import java.nio.file.{FileSystemException, Files}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileAlreadyExistsException, FileStatus, FileSystem, Path, PathFilter}
@@ -20,7 +19,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * checksum file, i.e. per micro-batch of every rule. This manager
   * writes those files with `java.nio` instead:
   *  - each file is written to a temp file in the same directory and
-  *    then renamed over its target atomically;
+  *    then renamed over its target atomically ([[LocalFiles]]);
   *  - a create with `overwriteIfPossible = false` links the temp file
   *    to the target and then deletes it, so it fails with
   *    `FileAlreadyExistsException` when the target exists and leaves
@@ -42,9 +41,8 @@ final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
 
   private[graft] val delegate: CheckpointFileManager = {
-    val scheme = Option(path.toUri.getScheme)
-      .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme)
-    if (scheme == "file") new LocalCheckpointFileManager.NioFiles(path, hadoopConf)
+    if (LocalFiles.isLocal(path, FileSystem.getDefaultUri(hadoopConf)))
+      new LocalCheckpointFileManager.NioFiles(path, hadoopConf)
     else {
       val conf = new Configuration(hadoopConf)
       conf.unset(LocalCheckpointFileManager.ConfKey)
@@ -83,23 +81,15 @@ object LocalCheckpointFileManager {
 
     private def local(p: Path): java.nio.file.Path = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
 
-    override def createTempFile(p: Path): FSDataOutputStream = {
-      val file = local(p)
-      val out =
-        try Files.newOutputStream(file)
-        catch { case _: NoSuchFileException =>
-          Files.createDirectories(file.getParent)
-          Files.newOutputStream(file)
-        }
-      new FSDataOutputStream(new BufferedOutputStream(out), null)
-    }
+    override def createTempFile(p: Path): FSDataOutputStream =
+      new FSDataOutputStream(LocalFiles.create(local(p)), null)
 
     override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit = {
       val (from, to) = (local(src), local(dst))
       val crc = to.resolveSibling(s".${to.getFileName}.crc")
       if (overwriteIfPossible) {
         Files.deleteIfExists(crc)
-        Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+        LocalFiles.publish(from, to)
       } else {
         try {
           try Files.createLink(to, from)
