@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: writes an sfN-shaped copy of the
@@ -25,15 +25,8 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/sf1")
     val sf = args.lift(1).map(_.toDouble).getOrElse(1.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = LocalSession.cpus("32")
+    val spark = LocalSession(cpus)
     import spark.implicits._
 
     val nOrders = (1500000 * sf).toLong

@@ -113,13 +113,7 @@ object Goldens {
   /** Re-record tool: prints the `expected` map entries for an SF. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("4")
     val name = java.nio.file.Paths.get(sfDir).getFileName.toString
     println(s""""$name" -> Map(""")
     compute(spark, sfDir).toSeq.sortBy(_._1).foreach { case (q, h) =>

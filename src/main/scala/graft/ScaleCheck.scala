@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Scale-rehearsal plan auditor: executes the named queries at the
@@ -19,15 +18,7 @@ object ScaleCheck {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val names = args.lift(1).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("q_join_multi", "q_dedup_bloom", "q_dedup_exact", "q_decontaminate"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cpus("32"))
 
     // untimed warm-up (the Bench pattern): the first query otherwise
     // absorbs ~8 s of JVM/codegen/parquet-footer startup and its secs

@@ -8,12 +8,17 @@ import graft.functions.TextHashFunctions._
 /** Document deduplication for LLM-scale corpora: exact content-hash,
   * MinHash+LSH, SimHash, and an n-gram Jaccard verify pass.
   *
-  * Everything is expressed with codegen'd built-ins (higher-order array
-  * functions, xxhash64) — no UDFs, no collect. Scale design:
-  *  - exact: one hash-shuffle on a 32-byte digest, partial-agg friendly.
-  *  - minhash: shuffle volume per doc = bands × (8-byte key + id), never
-  *    the text; candidate pairs are generated per LSH bucket with a hard
-  *    per-bucket cap so a degenerate bucket can't produce O(n²) pairs.
+  * Everything is expressed with codegen'd built-ins and kernels — no
+  * UDFs, no collect. The near-duplicate signatures (MinHash, SimHash)
+  * use the md5-based portable hash family of
+  * [[graft.functions.TextHashing]], so every signature, band bucket and
+  * agreement count replays bit-identically in DuckDB SQL. Scale design:
+  *  - exact: one hash-shuffle on a 32-byte sha-256 digest, partial-agg
+  *    friendly.
+  *  - minhash: shuffle volume per doc = bands × (band value slice + id),
+  *    never the text; candidate pairs are generated per LSH bucket with
+  *    a hard per-bucket cap so a degenerate bucket can't produce O(n²)
+  *    pairs.
   *  - simhash: 64-bit signature, banded into 16-bit chunks (pigeonhole:
   *    hamming ≤ 3 ⇒ at least one of 4 chunks equal).
   *  - verify: exact Jaccard only on the (tiny) candidate set, via a
@@ -44,61 +49,41 @@ object Dedup {
 
   /** k-element MinHash signature straight from the text — one
     * whole-stage-codegen call (tokenize → shingle → k min-hashes in a
-    * tight loop). The round-2 nested higher-order-function version was
-    * interpreted per element and 300× slower.
+    * tight loop): md5-based shingle hash + LCG permutations mod 2³¹−1
+    * (TextHashing.portableMinhashSig). Every step replays
+    * bit-identically in DuckDB SQL, so LSH pipelines built on it get a
+    * FULL oracle instead of a rows-only golden.
     */
   def minhashSignature(text: Column, n: Int, k: Int): Column =
-    minhash_sig(text, n, k)
+    portable_minhash_sig(text, n, k)
 
   /** A document with no n-token shingle carries the sentinel
-    * all-Long.MaxValue signature (see TextHashing.minhashSig). Such a
-    * doc has no LSH identity and must match NOTHING — without this
-    * guard every sub-shingle-length doc would collide with every
+    * all-Long.MaxValue signature (see TextHashing.portableMinhashSig).
+    * Such a doc has no LSH identity and must match NOTHING — without
+    * this guard every sub-shingle-length doc would collide with every
     * other at est_jaccard 1.0, a guaranteed false positive.
     */
   private def hasShingles(sig: Column): Column =
     element_at(sig, 1) =!= lit(Long.MaxValue)
 
-  /** The per-band (band, bucket-hash) structs of a signature — ONE
+  /** The per-band (band, raw r-slice) structs of a signature — ONE
     * definition shared by [[minhashPairs]] and [[minhashContaminated]]
-    * so LSH bucketing stays bit-identical across operators.
+    * so LSH bucketing stays identical across operators. The join key is
+    * the band's VALUE slice rather than a hash of it, so the bucketing
+    * arithmetic itself is SQL-replayable (grouping by raw values ≡
+    * grouping by an injective hash of them).
     */
-  private def bandBucketArray(sig: Column, bands: Int, r: Int): Column =
+  private def bandValsArray(sig: Column, bands: Int, r: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),
-      j => struct(j.as("band"), hash(j, slice(sig, j * r + 1, lit(r))).as("bh")))
+      j => struct(j.as("band"), slice(sig, j * r + 1, lit(r)).as("bv")))
 
-  /** Candidate near-duplicate pairs via banded MinHash LSH.
-    * Returns (a, b, est_jaccard) with a < b, distinct across bands,
-    * est_jaccard = fraction of agreeing signature positions.
+  /** Candidate pairs (a, b) with a < b, distinct, from (bucket keys,
+    * id) rows: each bucket's ids are sorted and capped at `maxBucket`,
+    * so a degenerate bucket can't produce O(n²) pairs.
     */
-  def minhashPairs(docs: DataFrame, textCol: String, idCol: String,
-                   n: Int = 3, k: Int = 64, bands: Int = 16,
-                   maxBucket: Int = 64, minEstJaccard: Double = 0.5,
-                   cacheSignatures: Boolean = true): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    // the signature frame feeds three consumers (bucket explode + the
-    // two candidate join-backs); materializing it turns three
-    // full-corpus tokenize/hash passes into one — at 100 TB the
-    // (id, 512-byte sig) frame is ~1000× smaller than the text it
-    // derives from. localCheckpoint (not persist): its blocks are
-    // reclaimed by the ContextCleaner once the frame is unreferenced,
-    // so repeated invocations don't accumulate session-lifetime cache
-    // entries. Callers managing their own lifecycle pass
-    // cacheSignatures = false and persist/unpersist around the call.
-    val raw = docs.select(col(idCol).as("id"),
-      minhashSignature(col(textCol), n, k).as("sig"))
-    val sigs = if (cacheSignatures) raw.localCheckpoint(true) else raw
-
-    // (band, bucket-hash, id): 16 rows of ~20 bytes per doc — the only
-    // thing shuffled at corpus scale. Sentinel (shingle-less) docs are
-    // excluded: they have no LSH identity.
-    val buckets = sigs.where(hasShingles(col("sig")))
-      .select(col("id"), explode(bandBucketArray(col("sig"), bands, r)).as("bk"))
-      .select(col("bk.band"), col("bk.bh"), col("id"))
-
-    val pairs = buckets
-      .groupBy(col("band"), col("bh"))
+  private def bucketPairs(rows: DataFrame, keys: Seq[String],
+                          maxBucket: Int): DataFrame =
+    rows.groupBy(keys.map(col): _*)
       .agg(slice(sort_array(collect_list(col("id"))), 1, maxBucket).as("ids"))
       .where(size(col("ids")) > 1)
       .select(explode(flatten(transform(col("ids"), (x, i) =>
@@ -107,16 +92,47 @@ object Dedup {
       .select(col("p.a"), col("p.b"))
       .distinct()
 
+  /** Candidate near-duplicate pairs via banded MinHash LSH.
+    * Returns (a, b, est_jaccard) with a < b, distinct across bands,
+    * est_jaccard = fraction of agreeing signature positions, rounded
+    * to 5 dp (m/k with k=32 terminates at 5 decimals — no half-way
+    * rounding case for the oracle to disagree on).
+    */
+  def minhashPairs(docs: DataFrame, textCol: String, idCol: String,
+                   n: Int = 3, k: Int = 32, bands: Int = 16,
+                   maxBucket: Int = 64,
+                   minEstJaccard: Double = 0.5): DataFrame = {
+    require(k % bands == 0, "bands must divide k")
+    val r = k / bands
+    // the signature frame feeds three consumers (bucket explode + the
+    // two candidate join-backs); materializing it turns three
+    // full-corpus tokenize/hash passes into one — at 100 TB the
+    // (id, 256-byte sig) frame is ~1000× smaller than the text it
+    // derives from. localCheckpoint (not persist): its blocks are
+    // reclaimed by the ContextCleaner once the frame is unreferenced,
+    // so repeated invocations don't accumulate session-lifetime cache
+    // entries.
+    val sigs = docs.select(col(idCol).as("id"),
+      minhashSignature(col(textCol), n, k).as("sig"))
+      .localCheckpoint(true)
+
+    // (band, band slice, id): 16 rows per doc — the only thing
+    // shuffled at corpus scale. Sentinel (shingle-less) docs are
+    // excluded: they have no LSH identity.
+    val buckets = sigs.where(hasShingles(col("sig")))
+      .select(col("id"), explode(bandValsArray(col("sig"), bands, r)).as("bk"))
+      .select(col("bk.band"), col("bk.bv"), col("id"))
+
     // join signatures back (shuffle join on id — no broadcast of the
     // corpus) and estimate similarity from signature agreement.
-    pairs
+    bucketPairs(buckets, Seq("band", "bv"), maxBucket)
       .join(sigs.select(col("id").as("a"), col("sig").as("sa")), "a")
       .join(sigs.select(col("id").as("b"), col("sig").as("sb")), "b")
       .withColumn("est_jaccard",
         graft.functions.VectorFunctions.sig_agree(col("sa"), col("sb"))
           .cast("double") / k)
       .where(col("est_jaccard") >= minEstJaccard)
-      .select(col("a"), col("b"), round(col("est_jaccard"), 4).as("est_jaccard"))
+      .select(col("a"), col("b"), round(col("est_jaccard"), 5).as("est_jaccard"))
   }
 
   /** FUZZY eval-set decontamination: corpus documents whose MinHash
@@ -124,7 +140,8 @@ object Dedup {
     * companion to the exact n-gram [[contaminated]] for paraphrased
     * or lightly-edited leakage that exact grams miss. Returns
     * (doc_id, eval_id, est_jaccard) for every corpus×eval candidate
-    * pair at or above `minEstJaccard`.
+    * pair at or above `minEstJaccard`, est_jaccard rounded to 5 dp as
+    * in [[minhashPairs]].
     *
     * Scale shape: the eval set is small by definition, so BOTH its
     * band buckets and its signatures broadcast — the corpus is never
@@ -135,101 +152,13 @@ object Dedup {
     */
   def minhashContaminated(corpus: DataFrame, evalSet: DataFrame,
                           textCol: String, idCol: String,
-                          n: Int = 3, k: Int = 64, bands: Int = 16,
+                          n: Int = 3, k: Int = 32, bands: Int = 16,
                           minEstJaccard: Double = 0.5): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
     def withBuckets(df: DataFrame, outId: String, sigName: String): DataFrame =
       df.select(col(idCol).as(outId),
           minhashSignature(col(textCol), n, k).as(sigName))
-        .where(hasShingles(col(sigName))) // sentinel docs match nothing
-        .select(col(outId), col(sigName),
-          explode(bandBucketArray(col(sigName), bands, r)).as("bk"))
-        .select(col(outId), col(sigName), col("bk.band"), col("bk.bh"))
-    val c = withBuckets(corpus, "doc_id", "sc")
-    val e = withBuckets(evalSet, "eval_id", "se")
-    c.join(broadcast(e), Seq("band", "bh"))
-      .select(col("doc_id"), col("eval_id"), col("sc"), col("se"))
-      .dropDuplicates("doc_id", "eval_id")
-      .withColumn("est_jaccard",
-        graft.functions.VectorFunctions.sig_agree(col("sc"), col("se"))
-          .cast("double") / k)
-      .where(col("est_jaccard") >= minEstJaccard)
-      .select(col("doc_id"), col("eval_id"),
-        round(col("est_jaccard"), 4).as("est_jaccard"))
-  }
-
-  /** [[minhashSignature]]'s oracle-replayable twin: md5-based shingle
-    * hash + LCG permutations mod 2³¹−1 (TextHashing.portableMinhashSig)
-    * — every step replays bit-identically in DuckDB SQL, so LSH
-    * pipelines built on it get a FULL oracle instead of a rows-only
-    * golden. Same codegen shape and cost class as the fast path.
-    */
-  def portableMinhashSignature(text: Column, n: Int, k: Int): Column =
-    portable_minhash_sig(text, n, k)
-
-  /** Per-band (band, raw r-slice) structs — the portable counterpart
-    * of [[bandBucketArray]]: the join key is the band's VALUE slice
-    * rather than its murmur hash, so the bucketing arithmetic itself
-    * is SQL-replayable (grouping by raw values ≡ grouping by an
-    * injective hash of them).
-    */
-  private def bandValsArray(sig: Column, bands: Int, r: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      j => struct(j.as("band"), slice(sig, j * r + 1, lit(r)).as("bv")))
-
-  /** [[minhashPairs]] over the portable hash family, with the band
-    * bucket keyed on raw signature slices. est_jaccard rounds to 5 dp
-    * (m/k with k=32 terminates at 5 decimals — no half-way rounding
-    * case for the oracle to disagree on). Scale shape is identical to
-    * [[minhashPairs]]: signature-only shuffles, capped buckets.
-    */
-  def minhashPairsPortable(docs: DataFrame, textCol: String, idCol: String,
-                           n: Int = 3, k: Int = 32, bands: Int = 16,
-                           maxBucket: Int = 64,
-                           minEstJaccard: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    val sigs = docs.select(col(idCol).as("id"),
-      portableMinhashSignature(col(textCol), n, k).as("sig"))
-      .localCheckpoint(true)
-
-    val buckets = sigs.where(hasShingles(col("sig")))
-      .select(col("id"), explode(bandValsArray(col("sig"), bands, r)).as("bk"))
-      .select(col("bk.band"), col("bk.bv"), col("id"))
-
-    val pairs = buckets
-      .groupBy(col("band"), col("bv"))
-      .agg(slice(sort_array(collect_list(col("id"))), 1, maxBucket).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .select(col("p.a"), col("p.b"))
-      .distinct()
-
-    pairs
-      .join(sigs.select(col("id").as("a"), col("sig").as("sa")), "a")
-      .join(sigs.select(col("id").as("b"), col("sig").as("sb")), "b")
-      .withColumn("est_jaccard",
-        graft.functions.VectorFunctions.sig_agree(col("sa"), col("sb"))
-          .cast("double") / k)
-      .where(col("est_jaccard") >= minEstJaccard)
-      .select(col("a"), col("b"), round(col("est_jaccard"), 5).as("est_jaccard"))
-  }
-
-  /** [[minhashContaminated]] over the portable hash family — same
-    * broadcast-the-eval-side scale shape, FULL-oracle arithmetic.
-    */
-  def minhashContaminatedPortable(corpus: DataFrame, evalSet: DataFrame,
-                                  textCol: String, idCol: String,
-                                  n: Int = 3, k: Int = 32, bands: Int = 16,
-                                  minEstJaccard: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    def withBuckets(df: DataFrame, outId: String, sigName: String): DataFrame =
-      df.select(col(idCol).as(outId),
-          portableMinhashSignature(col(textCol), n, k).as(sigName))
         .where(hasShingles(col(sigName))) // sentinel docs match nothing
         .select(col(outId), col(sigName),
           explode(bandValsArray(col(sigName), bands, r)).as("bk"))
@@ -247,34 +176,22 @@ object Dedup {
         round(col("est_jaccard"), 5).as("est_jaccard"))
   }
 
-  /** 64-bit SimHash over token hashes: bit i of the result is the sign
-    * of Σ_tokens (bit i set ? +1 : -1). Codegen kernel
-    * (graft.functions.SimHash64Expr).
-    */
-  def simhash(text: Column): Column = simhash64(text)
-
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Near-duplicate pairs via SimHash with 16-bit chunk blocking:
-    * hamming(a,b) ≤ 3 guarantees one of the four 16-bit chunks matches,
-    * so candidate generation shuffles only (chunk-idx, chunk-value, id).
+  /** Near-duplicate pairs via 64-bit SimHash over md5-derived token
+    * hashes (TextHashing.portableSimhash64: bit i is the sign of
+    * Σ_tokens (bit i set ? +1 : -1), DuckDB-replayable) with 16-bit
+    * chunk blocking: hamming(a,b) ≤ 3 guarantees one of the four
+    * 16-bit chunks matches, so candidate generation shuffles only
+    * (chunk-idx, chunk-value, id). Zero-token documents are excluded
+    * before pairing: their signature is the all-zeros sentinel, and a
+    * shared zero bucket would pair every empty doc with every other —
+    * the same sentinel discipline as [[minhashPairs]]' hasShingles
+    * filter.
     */
   def simhashPairs(docs: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3, maxBucket: Int = 64): DataFrame =
-    sigPairs(docs.select(col(idCol).as("id"), simhash(col(textCol)).as("sig")),
-      maxHamming, maxBucket)
-
-  /** [[simhashPairs]] over the portable (md5-derived, DuckDB-
-    * replayable) token-hash family. Zero-token documents are excluded
-    * before pairing: their signature is the all-zeros sentinel, and a
-    * shared zero bucket would pair every empty doc with every other —
-    * the same sentinel discipline as [[minhashPairsPortable]]'s
-    * hasShingles filter. Scale shape identical to [[simhashPairs]]:
-    * only (id, 64-bit sig) ever shuffles, capped per-chunk buckets.
-    */
-  def simhashPairsPortable(docs: DataFrame, textCol: String, idCol: String,
-                           maxHamming: Int = 3, maxBucket: Int = 64): DataFrame =
     sigPairs(docs
         .where(TextOps.tokenCount(col(textCol)) > 0)
         .select(col(idCol).as("id"), portable_simhash64(col(textCol)).as("sig")),
@@ -294,17 +211,7 @@ object Dedup {
           .as("c"))
       .select(col("c.chunk"), col("c.cv"), col("id"))
 
-    val pairs = chunked
-      .groupBy(col("chunk"), col("cv"))
-      .agg(slice(sort_array(collect_list(col("id"))), 1, maxBucket).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .select(col("p.a"), col("p.b"))
-      .distinct()
-
-    pairs
+    bucketPairs(chunked, Seq("chunk", "cv"), maxBucket)
       .join(sigs.select(col("id").as("a"), col("sig").as("siga")), "a")
       .join(sigs.select(col("id").as("b"), col("sig").as("sigb")), "b")
       .withColumn("hamming", hamming64(col("siga"), col("sigb")))

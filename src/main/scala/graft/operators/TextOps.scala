@@ -302,20 +302,14 @@ object TextOps {
       }
   }
 
-  /** Document fingerprint: min-sampled rolling hash over word 5-gram
-    * shingles (winnowing-style). Two documents sharing long runs of
-    * text collide with high probability; robust to reordering of
-    * distant parts. Returns a 64-bit fingerprint.
+  /** Document fingerprint: min-sampled hash over word 5-gram shingles
+    * (winnowing-style). Two documents sharing long runs of text collide
+    * with high probability; robust to reordering of distant parts.
+    * Returns a 64-bit fingerprint: the minimum md5-derived shingle base
+    * hash mod 2³¹−1 (whole-text md5 for sub-shingle docs), every step
+    * replayable as DuckDB md5 + BIGINT arithmetic.
     */
   def fingerprint(text: Column, n: Int = 5): Column =
-    graft.functions.TextHashFunctions.doc_fingerprint(text, n)
-
-  /** [[fingerprint]]'s oracle-replayable twin (md5-derived shingle base
-    * hashes mod 2³¹−1) — same min-sampling semantics, every step
-    * replayable as DuckDB md5 + BIGINT arithmetic. The query surface
-    * uses this family; production keeps the faster splitmix64 kernel.
-    */
-  def fingerprintPortable(text: Column, n: Int = 5): Column =
     graft.functions.TextHashFunctions.portable_doc_fingerprint(text, n)
 
   // ---- PII scrubbing (training-corpus redaction pass) ----
@@ -1268,12 +1262,14 @@ object TextOps {
       math.log(pt / pr)
     }
     val n = tokenCount(col(textCol))
+    // `+ 0.0` maps a rounded -0.0 to 0.0 (IEEE: -0.0 + 0.0 = 0.0), so
+    // the score's sign of zero is the same on every engine
     raw.select(col(idCol).as("doc_id"),
       n.as("n_tokens"),
-      round(when(n > 0,
+      (round(when(n > 0,
         graft.functions.TextStatsFunctions.dsir_sum(col(textCol), warr) /
           n.cast("double"))
-        .otherwise(lit(0.0)), 4).as("dsir_logratio"))
+        .otherwise(lit(0.0)), 4) + lit(0.0)).as("dsir_logratio"))
   }
 
   /** Corpus-wide paragraph-level exact dedup (the Dolma/C4 hygiene

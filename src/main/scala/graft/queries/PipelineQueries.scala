@@ -65,21 +65,18 @@ object PipelineQueries {
         "text", "doc_id")),
 
     // near-dup candidate pairs over the portable minhash family — the
-    // band/est arithmetic replays in DuckDB → FULL oracle. The
-    // internal-hash [[Dedup.minhashPairs]] kernel keeps its DedupSpec
-    // planted-recovery specs and still feeds the decontam queries.
+    // band/est arithmetic replays in DuckDB → FULL oracle.
     "q_dedup_minhash" -> ((s, d) =>
-      Dedup.minhashPairsPortable(withPlanted(docs(s, d)), "text", "doc_id",
+      Dedup.minhashPairs(withPlanted(docs(s, d)), "text", "doc_id",
         n = 3, k = 32, bands = 16, minEstJaccard = 0.5)
         .orderBy(col("a"), col("b"))),
 
     // simhash near-dup pairs over the portable token-hash family — the
     // per-bit sign sums, 16-bit chunk blocking, and hamming filter all
-    // replay in DuckDB → FULL oracle. The internal-hash
-    // [[Dedup.simhashPairs]] kernel keeps its DedupSpec specs and
-    // still backs the image dHash path via [[Dedup.sigPairs]].
+    // replay in DuckDB → FULL oracle. The same chunk blocking
+    // ([[Dedup.sigPairs]]) backs the image dHash path.
     "q_dedup_simhash" -> ((s, d) =>
-      Dedup.simhashPairsPortable(withPlanted(docs(s, d)), "text", "doc_id", maxHamming = 3)
+      Dedup.simhashPairs(withPlanted(docs(s, d)), "text", "doc_id", maxHamming = 3)
         .orderBy(col("a"), col("b"))),
 
     // incremental dedup: new-batch rows not already in the corpus,
@@ -102,7 +99,7 @@ object PipelineQueries {
     "q_dedup_jaccard" -> ((s, d) => {
       val planted = withPlanted(docs(s, d))
       Dedup.jaccardVerify(
-        Dedup.minhashPairsPortable(planted, "text", "doc_id", minEstJaccard = 0.3)
+        Dedup.minhashPairs(planted, "text", "doc_id", minEstJaccard = 0.3)
           .select(col("a"), col("b")),
         planted, "text", "doc_id", n = 3, minJaccard = 0.5)
         .orderBy(col("a"), col("b"))
@@ -112,12 +109,12 @@ object PipelineQueries {
     // labeled by large-star/small-star contraction
     // ([[Dedup.clustersStar]] — O(log²) rounds vs label propagation's
     // diameter bound). DuckDB replays the components as a recursive
-    // min-label closure → FULL oracle; [[Dedup.clusters]] keeps its
-    // DedupSpec agreement + planted-graph specs.
+    // min-label closure → FULL oracle. Label propagation
+    // ([[Dedup.clusters]]) still runs under q_dedup_keepbest.
     "q_dedup_cluster" -> ((s, d) => {
       val planted = withPlanted(docs(s, d))
       Dedup.clustersStar(
-        Dedup.minhashPairsPortable(planted, "text", "doc_id", minEstJaccard = 0.5)
+        Dedup.minhashPairs(planted, "text", "doc_id", minEstJaccard = 0.5)
           .select(col("a"), col("b")))
         .orderBy(col("id"))
     }),
@@ -471,14 +468,12 @@ object PipelineQueries {
 
     // document fingerprint (min-sampled shingle hash) over the
     // portable md5 family — FULL oracle (min per doc of the md5-derived
-    // base hashes, whole-text fallback for sub-shingle docs); the
-    // production path keeps the faster splitmix64 kernel
-    // (TextOps.fingerprint, pinned by TextOpsSpec invariances).
+    // base hashes, whole-text fallback for sub-shingle docs).
     "q_text_fingerprint" -> ((s, d) =>
       docs(s, d).select(
         col("doc_id"),
-        TextOps.fingerprintPortable(col("text")).as("fp"),
-        TextOps.fingerprintPortable(col("text"), n = 8).as("fp8"))),
+        TextOps.fingerprint(col("text")).as("fp"),
+        TextOps.fingerprint(col("text"), n = 8).as("fp8"))),
 
     // ---- multimodal plumbing (stub decoder, real batch shape) ----
     "q_multimodal" -> ((s, d) => Multimodal.features(s, docs(s, d))),
@@ -682,7 +677,7 @@ object PipelineQueries {
         .unionByName(evalSet.where(col("doc_id") < 8).select(
           (col("doc_id") + 400000).as("doc_id"),
           concat(col("text"), lit(" lightly edited tail appended")).as("text")))
-      Dedup.minhashContaminatedPortable(corpus, evalSet, "text", "doc_id",
+      Dedup.minhashContaminated(corpus, evalSet, "text", "doc_id",
         minEstJaccard = 0.5)
         .orderBy(col("doc_id"), col("eval_id"))
     }),
@@ -933,7 +928,7 @@ object PipelineQueries {
       val scored = planted.select(col("doc_id"),
         round(TextOps.qualityScore(col("text")), 6).as("quality"))
       Dedup.keepBest(scored,
-        Dedup.minhashPairsPortable(planted, "text", "doc_id", minEstJaccard = 0.5)
+        Dedup.minhashPairs(planted, "text", "doc_id", minEstJaccard = 0.5)
           .select(col("a"), col("b")),
         "doc_id", "quality")
         .orderBy(col("id"))
@@ -1015,7 +1010,7 @@ object PipelineQueries {
        |  GROUP BY id, i),
        |sv$tag AS (SELECT id, array_agg(v ORDER BY i) AS sv FROM sig$tag GROUP BY id)""".stripMargin
 
-  /** DuckDB replay of [[Dedup.minhashPairsPortable]]'s candidate
+  /** DuckDB replay of [[Dedup.minhashPairs]]' candidate
     * pipeline over the sv$tag signature CTE (k=32, 16 bands of 2 rows,
     * buckets sorted and capped at 64 ids): ends in cand$tag(a, b, est)
     * with est the unrounded agreement fraction, filtered at $minEst.
@@ -2111,7 +2106,7 @@ object PipelineQueries {
         |   / ((r.c + 0.5) / (tot.rt + 0.5 * 256))) AS wt
         |  FROM rcnt r LEFT JOIN tcnt t USING (bk) CROSS JOIN tot),
         |s AS (SELECT b.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  round(avg(w.wt), 4) AS dsir_logratio
+        |  round(avg(w.wt), 4) + 0.0 AS dsir_logratio
         |  FROM b JOIN w USING (bk) GROUP BY b.doc_id)
         |SELECT d.doc_id, coalesce(s.n_tokens, 0) AS n_tokens,
         |  coalesce(s.dsir_logratio, 0.0) AS dsir_logratio

@@ -39,29 +39,6 @@ class DedupSpec extends SparkSuite {
     assert(res.where(col("keep_id") >= 500000).count() == 0)
   }
 
-  test("minhash LSH recovers planted near-duplicates") {
-    val pairs = Dedup.minhashPairs(planted, "text", "doc_id", n = 3, k = 64,
-      bands = 16, minEstJaccard = 0.5).cache()
-    val hits = pairs.where(col("b") === col("a") + 100000).count()
-    assert(hits >= 16, s"recovered only $hits of 20 planted near-dup pairs")
-    // est_jaccard for an appended-suffix copy must be high
-    assert(pairs.where(col("b") === col("a") + 100000)
-      .agg(min("est_jaccard")).first().getDouble(0) > 0.5)
-    pairs.unpersist()
-  }
-
-  test("simhash recovers planted near-duplicates") {
-    // 4 appended tokens on ~56-token docs shift up to ~8 signature bits
-    // (measured distribution: 19/20 pairs within hamming 8); chunk
-    // blocking guarantees candidates at hamming <= 3 and finds nearly
-    // all pairs at 8 in practice.
-    val pairs = Dedup.simhashPairs(planted, "text", "doc_id", maxHamming = 8)
-    val hits = pairs.where(col("b") === col("a") + 100000).count()
-    assert(hits >= 14, s"recovered only $hits of 20 planted simhash pairs")
-    // the guaranteed regime: every returned pair respects the cutoff
-    assert(pairs.where(col("hamming") > 8).count() == 0)
-  }
-
   test("portable simhash kernel matches an independent reimplementation") {
     // recompute by hand with JDK md5: token hash = first 16 hex chars
     // of md5(token) as an unsigned 64-bit value, per-bit sign sums
@@ -88,7 +65,7 @@ class DedupSpec extends SparkSuite {
     val withEmpty = planted.unionByName(
       spark.createDataFrame(Seq((700000L, "   "), (700001L, ""), (700002L, "\t\n")))
         .toDF("doc_id", "text"))
-    val pairs = Dedup.simhashPairsPortable(withEmpty, "text", "doc_id",
+    val pairs = Dedup.simhashPairs(withEmpty, "text", "doc_id",
       maxHamming = 8).cache()
     val hits = pairs.where(col("b") === col("a") + 100000).count()
     assert(hits >= 14, s"recovered only $hits of 20 planted simhash pairs")
@@ -433,25 +410,6 @@ class DedupSpec extends SparkSuite {
     assert(hits == 0, "short corpus docs must not hit unrelated eval docs")
   }
 
-  test("fuzzy decontamination flags planted near-copies of eval docs") {
-    import org.apache.spark.sql.functions.{col, concat, lit}
-    val all = Tables(spark, sf, "documents")
-    val evalSet = all.where(col("doc_id") < 20).select(col("doc_id"), col("text"))
-    val corpus = all.where(col("doc_id") >= 20).select(col("doc_id"), col("text"))
-      .unionByName(evalSet.where(col("doc_id") < 8).select(
-        (col("doc_id") + 400000).as("doc_id"),
-        concat(col("text"), lit(" lightly edited tail appended")).as("text")))
-    val hits = Dedup.minhashContaminated(corpus, evalSet, "text", "doc_id",
-      minEstJaccard = 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // every planted near-copy is caught against its own eval source
-    (0L until 8L).foreach { i =>
-      assert(hits.exists(h => h._1 == i + 400000 && h._2 == i),
-        s"planted near-copy of eval doc $i not flagged")
-    }
-    assert(hits.forall(_._3 >= 0.5))
-  }
-
   test("fuzzy decontamination broadcasts the eval side; the corpus never shuffles for it") {
     import org.apache.spark.sql.functions.col
     val all = Tables(spark, sf, "documents")
@@ -529,13 +487,43 @@ class DedupSpec extends SparkSuite {
   }
 
   test("portable minhash LSH recovers planted near-duplicates") {
-    val pairs = Dedup.minhashPairsPortable(planted, "text", "doc_id",
+    val pairs = Dedup.minhashPairs(planted, "text", "doc_id",
       minEstJaccard = 0.5).cache()
     val hits = pairs.where(col("b") === col("a") + 100000).count()
     assert(hits >= 16, s"recovered only $hits of 20 planted near-dup pairs")
     assert(pairs.where(col("b") === col("a") + 100000)
       .agg(min("est_jaccard")).first().getDouble(0) >= 0.5)
     pairs.unpersist()
+  }
+
+  private def plantedText(ids: Seq[Long]): Map[Long, String] =
+    planted.where(col("doc_id").isin(ids: _*))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  test("minhashPairs runs the portable family: est_jaccard = signature agreement / 32") {
+    val pairs = Dedup.minhashPairs(planted, "text", "doc_id", minEstJaccard = 0.5)
+      .where(col("b") === col("a") + 100000)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(pairs.length >= 2, s"too few planted pairs recovered: ${pairs.toSeq}")
+    val text = plantedText(pairs.flatMap(p => Seq(p._1, p._2)))
+    def sig(id: Long) = graft.functions.TextHashing.portableMinhashSig(text(id), 3, 32)
+    pairs.foreach { case (a, b, est) =>
+      val agree = sig(a).zip(sig(b)).count { case (x, y) => x == y }
+      assert(est == agree / 32.0, s"pair ($a, $b): est_jaccard $est, agreement $agree/32")
+    }
+  }
+
+  test("simhashPairs runs the portable family: hamming = bit distance of portable simhashes") {
+    val pairs = Dedup.simhashPairs(planted, "text", "doc_id", maxHamming = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(pairs.count(p => p._2 == p._1 + 100000) >= 2,
+      s"too few planted pairs recovered: ${pairs.toSeq}")
+    val text = plantedText(pairs.flatMap(p => Seq(p._1, p._2)))
+    def sim(id: Long) = graft.functions.TextHashing.portableSimhash64(text(id))
+    pairs.foreach { case (a, b, hamming) =>
+      assert(hamming == java.lang.Long.bitCount(sim(a) ^ sim(b)),
+        s"pair ($a, $b): hamming $hamming")
+    }
   }
 
   test("portable fuzzy decontamination flags planted near-copies; short docs match nothing") {
@@ -546,7 +534,7 @@ class DedupSpec extends SparkSuite {
         (col("doc_id") + 400000).as("doc_id"),
         concat(col("text"), lit(" lightly edited tail appended")).as("text")))
       .unionByName(spark.createDataFrame(Seq((900000L, "hi"))).toDF("doc_id", "text"))
-    val hits = Dedup.minhashContaminatedPortable(corpus, evalSet, "text", "doc_id",
+    val hits = Dedup.minhashContaminated(corpus, evalSet, "text", "doc_id",
       minEstJaccard = 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     (0L until 8L).foreach { i =>
