@@ -245,6 +245,10 @@ final class ZmqPub private (server: ServerSocket) extends AutoCloseable {
   def close(): Unit = {
     running = false
     try server.close() catch { case _: Exception => () }
+    // the acceptor's in-flight accept() keeps the listening socket bound
+    // until the thread leaves it; wait, so the port can be rebound as
+    // soon as close() returns
+    acceptor.join(5000)
     peers.forEach(p => try p.socket.close() catch { case _: Exception => () })
     peers.clear()
   }

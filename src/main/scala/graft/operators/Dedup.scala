@@ -252,7 +252,8 @@ object Dedup {
     * pair list (e.g. [[minhashPairs]]), cluster the pairs and keep the
     * highest-scoring member of each cluster (ties broken by id, so
     * selection is deterministic); docs outside any cluster keep
-    * themselves. The keep-first policy of exact dedup discards
+    * themselves. A pair graph that [[clusters]] cannot label within
+    * its cap throws. The keep-first policy of exact dedup discards
     * whichever copy sorts later — this is the variant real pipelines
     * run when near-duplicates differ in quality (keep the cleanest
     * copy, not the earliest).
@@ -275,85 +276,37 @@ object Dedup {
   }
 
   /** Transitive duplicate clusters from a pair list: connected
-    * components via distributed label propagation (each node adopts the
-    * minimum id reachable; iterate until fixpoint). The min label
-    * travels one hop per iteration; iteration stops as soon as a round
-    * changes no label (one tiny existence probe per round on the
-    * already-materialized frame), with `maxIter` as a runaway cap for
-    * pathological graphs. Each iteration is one join + one
-    * min-aggregation — no driver-side graph. Returns (id, cluster)
-    * with cluster = the minimum member id, i.e. the representative a
-    * pipeline keeps.
-    */
-  def clusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // undirected edge list, both directions
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // pin the pair list before mirroring it — the union's two branches
-    // would otherwise evaluate the (expensive) candidate pipeline twice
-    val p = pairs.persist(lvl)
-    val edges = p.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(p.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
-    p.unpersist()
-    // each iteration references `labels` twice (self + neighbor side),
-    // so an unmaterialized loop doubles the recompute tree per pass.
-    // localCheckpoint(eager) truncates the plan to the materialized
-    // RDD each round — flat lineage, same pattern as Spark's own
-    // iterative algorithms (e.g. connected components in GraphX).
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), first(col("src"))).as("cluster"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // each node adopts the smallest label among itself and neighbors
-      val viaNeighbor = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("cluster")).as("ncluster"))
-      val stepped = labels.join(viaNeighbor, Seq("id"), "left")
-        .select(col("id"), col("cluster").as("prev"),
-          least(col("cluster"), coalesce(col("ncluster"), col("cluster"))).as("cluster"))
-        .localCheckpoint(true)
-      converged = stepped.where(col("cluster") =!= col("prev")).isEmpty
-      labels = stepped.select(col("id"), col("cluster"))
-      iter += 1
-    }
-    labels
-  }
-
-  /** Connected components via alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC 2014) — the O(log²)-round alternative to
-    * [[clusters]]' label propagation, whose round count is the graph
-    * DIAMETER. Near-dup graphs are mostly small cliques where either
-    * algorithm converges in 2–3 rounds, but a 100 TB pair list can
-    * carry long transitive chains (crawl-date series, version
-    * histories) where diameter-bound hopping is the bottleneck; star
-    * contraction halves chain length every alternation. Output
-    * contract is identical: (id, cluster), cluster = minimum member id.
+    * components via alternating large-star / small-star contraction
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014). Returns (id, cluster) with cluster = the minimum member
+    * id, i.e. the representative a pipeline keeps. Near-dup graphs are
+    * mostly small cliques that converge in 2–3 rounds, but a 100 TB pair
+    * list can carry long transitive chains (crawl-date series, version
+    * histories); star contraction halves chain length every alternation,
+    * so its round count is O(log² n) instead of label propagation's
+    * graph DIAMETER.
     *
     * Scale shape per alternation: two groupBy shuffles on node id over
-    * the EDGE set (never the corpus) plus the joins back — the same
-    * per-round cost class as label propagation; the win is the round
-    * count. Each alternation's FINAL (small-star) edge set is
-    * localCheckpoint'd (flat lineage, the [[clusters]] pattern); the
-    * intermediate large-star output is not — one eager
-    * materialization per alternation instead of two (r22; ReusedExchange
-    * keeps the large-star work single-run, see the loop body).
-    * Convergence is detected by
-    * the STAR-FOREST test — no canonical edge's parent is itself some
-    * other edge's leaf (one semi-join existence probe per alternation
-    * on the already-materialized edge set). A star forest is exactly
-    * the paper's fixpoint (both transforms are the identity on it, see
-    * the fixpoint labeling below), and unlike the r20 fingerprint-
-    * stability check it fires the moment the forest forms instead of
-    * paying one further full alternation to observe "nothing changed"
-    * (r21 — clique-heavy near-dup graphs converge one alternation
-    * earlier, which at bench scale is ~⅓ of the loop's jobs);
-    * `maxIter` caps pathological graphs.
+    * the EDGE set (never the corpus) plus the joins back — no
+    * driver-side graph. Each alternation's FINAL (small-star) edge set
+    * is localCheckpoint'd (eager — flat lineage, the pattern of Spark's
+    * own iterative algorithms); the intermediate large-star output is
+    * not — one eager materialization per alternation instead of two
+    * (ReusedExchange keeps the large-star work single-run, see the loop
+    * body). Convergence is detected by the STAR-FOREST test — no
+    * canonical edge's parent is itself some other edge's leaf (one
+    * semi-join existence probe per alternation on the
+    * already-materialized edge set). A star forest is exactly the
+    * paper's fixpoint (both transforms are the identity on it, see the
+    * fixpoint labeling below), so the loop stops the moment the forest
+    * forms.
+    *
+    * @throws IllegalStateException when `maxIter` alternations end
+    *   without a star forest — the labels would be wrong, so none are
+    *   returned. Callers run the default cap; `maxIter` is a parameter
+    *   only so tests can force the failure with a small one.
     */
-  def clustersStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+  def clusters(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val p = pairs.persist(lvl)
     val nodes = p.select(col("a").as("id"))
@@ -417,6 +370,8 @@ object Dedup {
       edges = ss
       iter += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"Dedup.clusters: no star forest after maxIter = $maxIter alternations")
     // at the fixpoint every component is a star rooted at its minimum:
     // canonical edges are (root, leaf), so each leaf's label is the min
     // u over its edges; roots and isolated nodes label themselves
@@ -557,24 +512,17 @@ object Dedup {
   def bloomNewDocs(corpus: DataFrame, batch: DataFrame,
                    textCol: String, expectedItems: Long,
                    fpp: Double = 0.01, nShards: Int = 1): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.sql.types.BinaryType
-
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     val h = xxhash64(col(textCol))
-    val might: Column =
-      if (nShards == 1) {
-        val bloomBytes = bloomBytesFor(corpus, h, expectedItems, fpp)
-        // an EMPTY corpus builds no filter (Spark's aggregate returns
-        // null at cardinality 0) — every batch row is new by definition
-        if (bloomBytes == null) return batch
-        ColumnBridge.column(BloomFilterMightContain(
-          Literal(bloomBytes, BinaryType), ColumnBridge.expression(h)))
-      } else {
-        val filters = bloomShardFilters(corpus, h, nShards,
-          math.max(1L, expectedItems / nShards), fpp)
-        if (filters.isEmpty) return batch
+    val filters = bloomFilters(corpus, h, nShards, expectedItems, fpp)
+    // an EMPTY corpus builds no filter (Spark's aggregate returns null
+    // at cardinality 0) — every batch row is new by definition
+    if (filters.isEmpty) return batch
+    val (batchH, might, helpers) =
+      if (nShards == 1)
+        (batch.withColumn("__h", h), bloomMightContain(filters(0L), h), Seq("__h"))
+      else {
         // the filter blobs ride a BROADCAST (one torrent fetch per
         // executor), never the serialized plan — a CASE chain of
         // nShards filter literals shipped every shard to every task
@@ -583,22 +531,13 @@ object Dedup {
         // filter; a shard absent from the corpus has no filter and its
         // batch rows are definitely new.
         val filtersB = corpus.sparkSession.sparkContext.broadcast(filters)
-        val shard = pmod(h, lit(nShards.toLong))
-        val batchH = batch.withColumn("__h", h).withColumn("__shard", shard)
+        val shardH = batch.withColumn("__h", h)
+          .withColumn("__shard", pmod(h, lit(nShards.toLong)))
           .repartition(nShards, col("__shard"))
-        val might = ColumnBridge.column(BloomShardMightContain(filtersB,
+        (shardH, ColumnBridge.column(BloomShardMightContain(filtersB,
           Seq(ColumnBridge.expression(col("__shard")),
-            ColumnBridge.expression(col("__h")))))
-        val candidates = batchH.filter(might)
-        val confirmed = corpus.select(h.as("__h"))
-          .join(broadcast(candidates.select(col("__h")).distinct()), "__h", "left_semi")
-          .distinct()
-        return candidates
-          .join(broadcast(confirmed), Seq("__h"), "left_anti")
-          .unionByName(batchH.filter(!might))
-          .drop("__h", "__shard")
+            ColumnBridge.expression(col("__h"))))), Seq("__h", "__shard"))
       }
-    val batchH = batch.withColumn("__h", h)
     val candidates = batchH.filter(might)
     val confirmed = corpus.select(h.as("__h"))
       .join(broadcast(candidates.select(col("__h")).distinct()), "__h", "left_semi")
@@ -606,7 +545,7 @@ object Dedup {
     candidates
       .join(broadcast(confirmed), Seq("__h"), "left_anti")
       .unionByName(batchH.filter(!might))
-      .drop("__h")
+      .drop(helpers: _*)
   }
 
   /** Streaming twin of [[bloomNewDocs]]: `batch` is a STREAMING frame
@@ -626,16 +565,10 @@ object Dedup {
   def bloomNewDocsStream(corpus: DataFrame, batch: DataFrame,
                          textCol: String, expectedItems: Long,
                          fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.sql.types.BinaryType
-
     val h = xxhash64(col(textCol))
-    val bloomBytes = bloomBytesFor(corpus, h, expectedItems, fpp)
-    if (bloomBytes == null) return batch // empty corpus: all rows are new
-    val might = ColumnBridge.column(BloomFilterMightContain(
-      Literal(bloomBytes, BinaryType), ColumnBridge.expression(h)))
+    val filters = bloomFilters(corpus, h, 1, expectedItems, fpp)
+    if (filters.isEmpty) return batch // empty corpus: all rows are new
+    val might = bloomMightContain(filters(0L), h)
     val corpusH = corpus.select(h.as("__h")).distinct()
     val batchH = batch.withColumn("__h", h)
     batchH.filter(might)
@@ -644,41 +577,29 @@ object Dedup {
       .drop("__h")
   }
 
-  /** Build the corpus Bloom filter (serialized), or null for an empty
-    * corpus. Sized as -n·ln p/(ln 2)² bits; Spark silently clamps the
-    * aggregate to `spark.sql.optimizer.runtime.bloomFilter.maxNumBits`
-    * / `.maxNumItems` (defaults 2^26 bits / 4M items — far below a
+  /** The corpus Bloom filters (serialized), one per hash-prefix shard
+    * `pmod(h, nShards)`, each sized for `expectedItems / nShards` items
+    * as -n·ln p/(ln 2)² bits; empty for an empty corpus, and a shard
+    * absent from the corpus has no entry. One shard is a global
+    * aggregate (key 0, the driver takes one row); more shards are one
+    * grouped pass whose shuffle moves only partial FILTER blobs
+    * (≤ tasks × nShards × bits/8 bytes), never corpus rows, and the
+    * driver collects nShards rows instead of one giant one. Spark
+    * silently clamps the aggregate to
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` /
+    * `.maxNumItems` (defaults 2^26 bits / 4M items — far below a
     * corpus-scale filter), so both caps are raised for the build and
     * restored after.
     */
-  /** One grouped pass training a Bloom filter per hash-prefix shard:
-    * `groupBy(pmod(h, nShards))` + BloomFilterAggregate. The shuffle
-    * moves only partial FILTER blobs (≤ tasks × nShards × bits/8
-    * bytes), never corpus rows, and the driver collects nShards
-    * (shard, bytes) rows instead of one giant one. Shards absent from
-    * the corpus simply yield no row.
-    */
-  private def bloomShardFilters(corpus: DataFrame, h: Column, nShards: Int,
-                                perShardItems: Long, fpp: Double): Map[Long, Array[Byte]] = {
+  private def bloomFilters(corpus: DataFrame, h: Column, nShards: Int,
+                           expectedItems: Long, fpp: Double): Map[Long, Array[Byte]] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graft.ColumnBridge
 
+    val items = math.max(1L, expectedItems / nShards)
     val numBits = math.max(64L,
-      (-perShardItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    withRaisedBloomCaps(corpus, numBits, perShardItems) {
-      val agg = new BloomFilterAggregate(
-        ColumnBridge.expression(h),
-        Literal(perShardItems), Literal(numBits)).toAggregateExpression()
-      corpus.groupBy(pmod(h, lit(nShards.toLong)).as("__shard"))
-        .agg(ColumnBridge.column(agg).as("bf"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    }
-  }
-
-  private def withRaisedBloomCaps[A](corpus: DataFrame, numBits: Long,
-                                     expectedItems: Long)(body: => A): A = {
+      (-items * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
     val conf = corpus.sparkSession.conf
     val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
@@ -686,28 +607,28 @@ object Dedup {
     val oldItems = conf.getOption(itemsKey)
     try {
       if (oldBits.forall(_.toLong < numBits)) conf.set(bitsKey, numBits.toString)
-      if (oldItems.forall(_.toLong < expectedItems)) conf.set(itemsKey, expectedItems.toString)
-      body
+      if (oldItems.forall(_.toLong < items)) conf.set(itemsKey, items.toString)
+      val bf = ColumnBridge.column(new BloomFilterAggregate(ColumnBridge.expression(h),
+        Literal(items), Literal(numBits)).toAggregateExpression()).as("bf")
+      if (nShards == 1)
+        Option(corpus.select(bf).head().getAs[Array[Byte]](0)).map(0L -> _).toMap
+      else
+        corpus.groupBy(pmod(h, lit(nShards.toLong)).as("__shard")).agg(bf)
+          .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
     } finally {
       oldBits match { case Some(v) => conf.set(bitsKey, v); case None => conf.unset(bitsKey) }
       oldItems match { case Some(v) => conf.set(itemsKey, v); case None => conf.unset(itemsKey) }
     }
   }
 
-  private def bloomBytesFor(corpus: DataFrame, h: Column,
-                            expectedItems: Long, fpp: Double): Array[Byte] = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+  /** Map-side probe of one serialized Bloom filter, carried in the plan
+    * as a literal.
+    */
+  private def bloomMightContain(bytes: Array[Byte], h: Column): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graft.ColumnBridge
-
-    val numBits = math.max(64L,
-      (-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    withRaisedBloomCaps(corpus, numBits, expectedItems) {
-      val agg = new BloomFilterAggregate(
-        ColumnBridge.expression(h),
-        Literal(expectedItems), Literal(numBits)).toAggregateExpression()
-      corpus.select(ColumnBridge.column(agg).as("bf")).head().getAs[Array[Byte]](0)
-    }
+    ColumnBridge.column(BloomFilterMightContain(
+      Literal(bytes, org.apache.spark.sql.types.BinaryType), ColumnBridge.expression(h)))
   }
 
   /** SemDeDup-style semantic near-duplicate detection over an

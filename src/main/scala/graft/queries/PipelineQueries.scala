@@ -106,14 +106,12 @@ object PipelineQueries {
     }),
 
     // transitive near-dup clusters over the portable pair graph,
-    // labeled by large-star/small-star contraction
-    // ([[Dedup.clustersStar]] — O(log²) rounds vs label propagation's
-    // diameter bound). DuckDB replays the components as a recursive
-    // min-label closure → FULL oracle. Label propagation
-    // ([[Dedup.clusters]]) still runs under q_dedup_keepbest.
+    // labeled by large-star/small-star contraction ([[Dedup.clusters]],
+    // also under q_dedup_keepbest). DuckDB replays the components as a
+    // recursive min-label closure → FULL oracle.
     "q_dedup_cluster" -> ((s, d) => {
       val planted = withPlanted(docs(s, d))
-      Dedup.clustersStar(
+      Dedup.clusters(
         Dedup.minhashPairs(planted, "text", "doc_id", minEstJaccard = 0.5)
           .select(col("a"), col("b")))
         .orderBy(col("id"))
@@ -180,9 +178,9 @@ object PipelineQueries {
                 lit(" fresh crawl content for the monthly refresh")))
               .as("text")))
       // the delta is refresh-bounded (small) and fans out into four
-      // consumer branches — materialize it once (eager localCheckpoint,
-      // the clusters pattern) so the digest-diff subtree isn't
-      // replicated per branch (4 extra corpus digest passes otherwise)
+      // consumer branches — materialize it once (eager localCheckpoint)
+      // so the digest-diff subtree isn't replicated per branch (4 extra
+      // corpus digest passes otherwise)
       val delta = Dedup.corpusDiff(v1, v2, "doc_id", "text")
         .where(col("status") =!= "unchanged").localCheckpoint(true)
       val candidates = v2.join(

@@ -12,6 +12,24 @@ class DedupSpec extends SparkSuite {
 
   private def docs = Tables(spark, sf, "documents").select(col("doc_id"), col("text"))
 
+  /** Connected components of an edge list by union-find on the driver:
+    * id -> minimum member id, the contract of [[Dedup.clusters]].
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // linking the larger root under the smaller keeps each root its
+    // component's minimum
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.map(x => x -> find(x)).toMap
+  }
+
   /** corpus ∪ near-dup copies (id+100000) of the first 20 docs. */
   private def planted = {
     val copies = docs.where(col("doc_id") < 20).select(
@@ -121,62 +139,65 @@ class DedupSpec extends SparkSuite {
       s"all chain members must collapse to cluster 1, got $cl")
   }
 
-  test("clustersStar agrees with label propagation on the planted pair graph") {
+  test("clusters matches a driver-side union-find on the planted pair graph") {
     val pairs = Dedup.minhashPairs(planted, "text", "doc_id", minEstJaccard = 0.5)
       .select(col("a"), col("b")).cache()
-    val lp = Dedup.clusters(pairs).collect()
+    val truth = unionFind(pairs.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq)
+    val got = Dedup.clusters(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.clustersStar(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == lp, "star contraction labels diverge from label propagation")
+    assert(truth.size >= 32)
+    assert(got == truth, "star contraction labels diverge from union-find")
     pairs.unpersist()
   }
 
-  test("clustersStar agrees with label propagation on an adversarial random graph") {
+  test("clusters matches a driver-side union-find on an adversarial random graph") {
     import spark.implicits._
     // deterministic pseudo-random sparse graph over 400 nodes: many
-    // components, chains, and a high-degree hub — the shapes that
-    // stress both algorithms differently
+    // components, chains, and a high-degree hub
     val edges = (0L until 300L).map { i =>
       val a = (i * 2654435761L) % 400L
       val b = (i * 40503L + 7L) % 400L
       (math.min(a, b), math.max(a, b))
-    }.filter(e => e._1 != e._2).toDF("a", "b")
-    val lp = Dedup.clusters(edges, maxIter = 50).collect()
+    }.filter(e => e._1 != e._2)
+    val got = Dedup.clusters(edges.toDF("a", "b")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.clustersStar(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == lp, "star contraction labels diverge on the random graph")
+    assert(got == unionFind(edges), "star contraction labels diverge on the random graph")
   }
 
-  test("clustersStar collapses a long chain in far fewer than diameter rounds") {
+  test("clusters collapses a long chain in far fewer than diameter rounds") {
     import spark.implicits._
-    // path 1-2-...-64: diameter 63. Label propagation needs 63 rounds
-    // (clusters' maxIter=20 default would NOT converge here); star
-    // contraction halves chain length per alternation and finishes
-    // inside its default cap.
+    // path 1-2-...-64: diameter 63, so one hop per round would need 63
+    // rounds; star contraction halves chain length per alternation and
+    // finishes inside its default cap of 30
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("a", "b")
-    val cl = Dedup.clustersStar(chain).collect()
+    val cl = Dedup.clusters(chain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cl.size == 64 && cl.values.forall(_ == 1L),
       s"chain must collapse to cluster 1, got ${cl.values.toSet}")
   }
 
-  test("label propagation's cap truncates the chain that star contraction solves") {
+  test("keepBest keeps exactly one member of a 200-node path") {
     import spark.implicits._
-    // the motivating case: diameter 199 ≫ any practical label-prop
-    // round cap. Star converges inside its default 30 alternations;
-    // a 10-round label-prop cap leaves distant nodes mislabeled.
+    // diameter 199: more hops than any per-hop round cap, one component
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
-    val star = Dedup.clustersStar(chain).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star.size == 200 && star.values.forall(_ == 1L),
-      s"star must fully collapse the chain, got ${star.values.toSet}")
-    val truncated = Dedup.clusters(chain, maxIter = 10)
-      .where(col("cluster") =!= 1L).count()
-    assert(truncated > 0,
-      "a 10-round label-prop cap must truncate a diameter-199 chain — " +
-        "if this passes, the motivating case for clustersStar is gone")
+    val scored = ((1L to 200L) :+ 1000L).map(i => (i, (i % 7).toDouble))
+      .toDF("doc_id", "quality")
+    val out = Dedup.keepBest(scored, chain, "doc_id", "quality")
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(3))).toMap
+    val kept = (1L to 200L).filter(i => out(i)._2)
+    // highest score 6, ties broken by the lowest id
+    assert(kept.size == 1, s"one path member must survive, got ${kept.size}")
+    assert(kept.head == 6L)
+    assert((1L to 200L).forall(i => out(i)._1 == 1L))
+    assert(out(1000L) == ((1000L, true)))
+  }
+
+  test("clusters throws at its cap instead of returning split labels") {
+    import spark.implicits._
+    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](Dedup.clusters(chain, maxIter = 2))
+    assert(e.getMessage.contains("Dedup.clusters") && e.getMessage.contains("maxIter = 2"),
+      e.getMessage)
   }
 
   test("corpusDiff edges: empty sides, identical corpora, null text") {
@@ -205,12 +226,12 @@ class DedupSpec extends SparkSuite {
       a, Seq((1L, "x", 0L)).toDF("id", "text", "__h1"), "id", "text"))
   }
 
-  test("clustersStar handles empty and single-pair inputs") {
+  test("clusters handles empty and single-pair inputs") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(Dedup.clustersStar(empty).count() == 0)
+    assert(Dedup.clusters(empty).count() == 0)
     val one = Seq((7L, 3L)).toDF("a", "b")
-    val cl = Dedup.clustersStar(one).collect()
+    val cl = Dedup.clusters(one).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cl == Map(3L -> 3L, 7L -> 3L))
   }

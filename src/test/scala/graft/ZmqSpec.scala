@@ -138,6 +138,18 @@ class ZmqSpec extends SparkSuite {
     }
   }
 
+  test("zmq: a closed publisher's port can be rebound at once") {
+    // the acceptor thread sits in accept(); close() must not return
+    // while that call still holds the listening socket
+    for (_ <- 1 to 50) {
+      val pub = ZmqPub.bind()
+      val port = pub.port
+      Thread.sleep(5)
+      pub.close()
+      ZmqPub.bind(port).close()
+    }
+  }
+
   test("zmq: bridge redials after the publisher restarts") {
     val port = {
       val probe = new java.net.ServerSocket(0)
