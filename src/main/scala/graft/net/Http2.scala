@@ -532,21 +532,9 @@ final class GrpcServer private (server: ServerSocket,
                                 handler: (String, Array[Byte]) => Array[Byte])
     extends AutoCloseable {
   import Http2._
-  @volatile private var running = true
   def port: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running)
-      try {
-        val s = server.accept()
-        s.setTcpNoDelay(true)
-        val t = new Thread(() => serve(s), s"grpc-server-conn-$port")
-        t.setDaemon(true)
-        t.start()
-      } catch { case _: Exception => () }
-  }, "grpc-server-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  private val acceptor = new AcceptLoop(server, "grpc-server")(s => () => serve(s))
 
   private final class StreamState {
     var path: String = ""
@@ -615,10 +603,7 @@ final class GrpcServer private (server: ServerSocket,
         (if (msg.nonEmpty) Seq("grpc-message" -> msg) else Nil))))
   }
 
-  def close(): Unit = {
-    running = false
-    try server.close() catch { case _: Exception => () }
-  }
+  def close(): Unit = acceptor.close()
 }
 
 object GrpcServer {

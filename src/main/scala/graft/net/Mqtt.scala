@@ -229,7 +229,6 @@ final class MqttBroker private (server: ServerSocket,
   }
 
   private val conns = ConcurrentHashMap.newKeySet[Conn]()
-  @volatile private var closed = false
 
   /** Timing-safe credential comparison (the broker may front real
     * traffic in a deployment; string == leaks length/prefix timing).
@@ -248,19 +247,11 @@ final class MqttBroker private (server: ServerSocket,
   private val delivered = new java.util.concurrent.atomic.AtomicLong()
   def deliveredCount: Long = delivered.get()
 
-  private val acceptThread = new Thread(() => {
-    try while (!closed) {
-      val s = server.accept()
-      s.setTcpNoDelay(true)
-      val conn = new Conn(s)
-      conns.add(conn)
-      val t = new Thread(() => serve(conn), s"mqtt-broker-conn-${s.getPort}")
-      t.setDaemon(true)
-      t.start()
-    } catch { case _: Exception if closed => () case _: java.net.SocketException => () }
-  }, "mqtt-broker-accept")
-  acceptThread.setDaemon(true)
-  acceptThread.start()
+  private val acceptor = new AcceptLoop(server, "mqtt-broker")({ s =>
+    val conn = new Conn(s)
+    conns.add(conn)
+    () => serve(conn)
+  })
 
   private def serve(conn: Conn): Unit = {
     val in = new BufferedInputStream(conn.socket.getInputStream)
@@ -338,8 +329,7 @@ final class MqttBroker private (server: ServerSocket,
   }
 
   def close(): Unit = {
-    closed = true
-    try server.close() catch { case _: Exception => () }
+    acceptor.close()
     conns.forEach(c => try c.socket.close() catch { case _: Exception => () })
   }
 }

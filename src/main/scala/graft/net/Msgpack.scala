@@ -214,21 +214,9 @@ object MsgpackRpcClient {
 final class MsgpackRpcServer private (server: ServerSocket,
                                       handlers: Map[String, Seq[Any] => Any])
     extends AutoCloseable {
-  @volatile private var running = true
   def port: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running)
-      try {
-        val s = server.accept()
-        s.setTcpNoDelay(true)
-        val t = new Thread(() => serve(s), s"msgpack-rpc-conn-$port")
-        t.setDaemon(true)
-        t.start()
-      } catch { case _: Exception => () }
-  }, "msgpack-rpc-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  private val acceptor = new AcceptLoop(server, "msgpack-rpc")(s => () => serve(s))
 
   private def serve(s: Socket): Unit = {
     val in = new DataInputStream(new java.io.BufferedInputStream(s.getInputStream))
@@ -251,10 +239,7 @@ final class MsgpackRpcServer private (server: ServerSocket,
     finally { try s.close() catch { case _: Exception => () } }
   }
 
-  def close(): Unit = {
-    running = false
-    try server.close() catch { case _: Exception => () }
-  }
+  def close(): Unit = acceptor.close()
 }
 
 object MsgpackRpcServer {

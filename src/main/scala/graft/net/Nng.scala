@@ -127,7 +127,6 @@ object NngPair {
   */
 final class NngListener private (server: ServerSocket) extends AutoCloseable {
   private val handlers = new CopyOnWriteArrayList[Array[Byte] => Unit]()
-  @volatile private var running = true
   @volatile private var peer: NngPair = _
 
   def port: Int = server.getLocalPort
@@ -144,44 +143,32 @@ final class NngListener private (server: ServerSocket) extends AutoCloseable {
 
   def hasPeer: Boolean = { val p = peer; p != null && p.isOpen }
 
-  private val acceptor = new Thread(() => {
-    while (running)
-      try {
-        val s = server.accept()
-        s.setTcpNoDelay(true)
-        // handshake runs on the per-peer thread under a read timeout:
-        // a peer that connects and never greets can't block accept()
-        val ht = new Thread(() => {
-          try {
-            s.setSoTimeout(5000)
-            val in = new DataInputStream(new java.io.BufferedInputStream(s.getInputStream))
-            val out = new DataOutputStream(new java.io.BufferedOutputStream(s.getOutputStream))
-            Nng.handshake(in, out, Nng.PairProtocol)
-            s.setSoTimeout(0) // reads block indefinitely once greeted
-            val p = new NngPair(s, in, out)
-            p.onMessage(body => handlers.forEach(h => h(body)))
-            p.startReader(s"nng-pair-accept-$port")
-            // the swap must be atomic across concurrent handshake
-            // threads, or two racing peers can both stay live
-            NngListener.this.synchronized {
-              val old = peer
-              peer = p
-              if (old != null) old.close() // pair semantics: one active peer
-            }
-          } catch {
-            case _: Throwable => try s.close() catch { case _: Exception => () }
-          }
-        }, s"nng-handshake-$port")
-        ht.setDaemon(true)
-        ht.start()
-      } catch { case _: Exception if !running => () case _: Exception => () }
-  }, "nng-listen")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  // the handshake runs on the connection's thread under a read
+  // timeout, so a peer that connects and never greets can't block accept()
+  private val acceptor = new AcceptLoop(server, "nng-listen")(s => () => {
+    try {
+      s.setSoTimeout(5000)
+      val in = new DataInputStream(new java.io.BufferedInputStream(s.getInputStream))
+      val out = new DataOutputStream(new java.io.BufferedOutputStream(s.getOutputStream))
+      Nng.handshake(in, out, Nng.PairProtocol)
+      s.setSoTimeout(0) // reads block indefinitely once greeted
+      val p = new NngPair(s, in, out)
+      p.onMessage(body => handlers.forEach(h => h(body)))
+      p.startReader(s"nng-pair-accept-$port")
+      // the swap must be atomic across concurrent handshake
+      // threads, or two racing peers can both stay live
+      NngListener.this.synchronized {
+        val old = peer
+        peer = p
+        if (old != null) old.close() // pair semantics: one active peer
+      }
+    } catch {
+      case _: Throwable => try s.close() catch { case _: Exception => () }
+    }
+  })
 
   def close(): Unit = {
-    running = false
-    try server.close() catch { case _: Exception => () }
+    acceptor.close()
     val p = peer
     if (p != null) p.close()
   }

@@ -398,7 +398,6 @@ final class RedisStubServer private (server: ServerSocket,
   }
 
   private val conns = ConcurrentHashMap.newKeySet[Conn]()
-  @volatile private var closed = false
 
   // key-value store behind the lookup-table surface: numbered
   // databases of string and list keys (binary-safe values)
@@ -453,19 +452,11 @@ final class RedisStubServer private (server: ServerSocket,
       s"rediss://${server.getInetAddress.getHostAddress}:$port"
     else s"redis://${server.getInetAddress.getHostAddress}:$port"
 
-  private val acceptThread = new Thread(() => {
-    try while (!closed) {
-      val s = server.accept()
-      s.setTcpNoDelay(true)
-      val conn = new Conn(s)
-      conns.add(conn)
-      val t = new Thread(() => serve(conn), s"redis-stub-conn-${s.getPort}")
-      t.setDaemon(true)
-      t.start()
-    } catch { case _: Exception => () }
-  }, "redis-stub-accept")
-  acceptThread.setDaemon(true)
-  acceptThread.start()
+  private val acceptor = new AcceptLoop(server, "redis-stub")({ s =>
+    val conn = new Conn(s)
+    conns.add(conn)
+    () => serve(conn)
+  })
 
   private def serve(conn: Conn): Unit = {
     val in = new BufferedInputStream(conn.socket.getInputStream)
@@ -606,8 +597,7 @@ final class RedisStubServer private (server: ServerSocket,
   }
 
   def close(): Unit = {
-    closed = true
-    try server.close() catch { case _: Exception => () }
+    acceptor.close()
     conns.forEach(c => try c.socket.close() catch { case _: Exception => () })
   }
 }

@@ -9,11 +9,11 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * Ingest path (source): a long-lived client subscribes on the broker
   * and appends every received frame to [[graft.sources.ConnectorFeed]]
-  * — the spool a `ConnectorSource` stream tails — so a streaming rule
-  * sees broker messages as incremental micro-batches. This is the
-  * reference's source connection model (one subscriber connection per
-  * stream, internal/io/mqtt/source.go) with Spark's file-stream spool
-  * as the hand-off, keeping decode + planning fully distributed.
+  * — the in-memory log a `ConnectorSource` stream reads — so a
+  * streaming rule sees broker messages as incremental micro-batches.
+  * This is the reference's source connection model (one subscriber
+  * connection per stream, internal/io/mqtt/source.go) with a DSv2
+  * micro-batch source as the hand-off.
   *
   * Egress path (sink): `ConnectorSink` asks [[SinkTransports]] for a
   * per-partition client; when the endpoint is a broker URL a real
@@ -165,7 +165,7 @@ object FeedBridges {
         // the EdgeX message bus IS mqtt or redis (reference
         // internal/io/edgex/client/edgex.go); ride the matching graft
         // transport and unwrap the JSON MessageEnvelope → flattened
-        // readings before spooling, so the declared schema sees
+        // readings before pushing, so the declared schema sees
         // {resourceName: value} objects exactly like the reference rule
         val messageType = options.getOrElse("messageType", "event")
         def pushEnvelope(frame: String): Unit =

@@ -140,7 +140,6 @@ final class WebSocketHub private (server: ServerSocket) {
 
   private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Conn]()
   private val received0 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  @volatile private var closed = false
 
   def port: Int = server.getLocalPort
   def url: String =
@@ -149,17 +148,7 @@ final class WebSocketHub private (server: ServerSocket) {
     else s"ws://${server.getInetAddress.getHostAddress}:$port/stream"
   def received: Seq[String] = { import scala.jdk.CollectionConverters._; received0.asScala.toSeq }
 
-  private val acceptThread = new Thread(() => {
-    try while (!closed) {
-      val s = server.accept()
-      s.setTcpNoDelay(true)
-      val t = new Thread(() => serve(s), s"ws-hub-conn-${s.getPort}")
-      t.setDaemon(true)
-      t.start()
-    } catch { case _: Exception => () }
-  }, "ws-hub-accept")
-  acceptThread.setDaemon(true)
-  acceptThread.start()
+  private val acceptor = new AcceptLoop(server, "ws-hub")(s => () => serve(s))
 
   private def serve(socket: Socket): Unit = {
     val in = new BufferedInputStream(socket.getInputStream)
@@ -208,8 +197,7 @@ final class WebSocketHub private (server: ServerSocket) {
   }
 
   def close(): Unit = {
-    closed = true
-    try server.close() catch { case _: Exception => () }
+    acceptor.close()
     conns.forEach(c => try c.socket.close() catch { case _: Exception => () })
   }
 }

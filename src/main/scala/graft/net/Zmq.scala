@@ -163,61 +163,49 @@ final class ZmqPub private (server: ServerSocket) extends AutoCloseable {
   }
 
   private val peers = new CopyOnWriteArrayList[Peer]()
-  @volatile private var running = true
 
   def port: Int = server.getLocalPort
   def address: String = s"tcp://127.0.0.1:$port"
 
-  private val acceptor = new Thread(() => {
-    while (running)
-      try {
-        val s = server.accept()
-        s.setTcpNoDelay(true)
-        // ZMTP handshake runs on the per-peer thread under a read
-        // timeout: one peer that connects and never greets must not
-        // block accept() for every later subscriber
-        val reader = new Thread(() => {
-          var peer: Peer = null
-          try {
-            s.setSoTimeout(5000)
-            val in = new DataInputStream(new java.io.BufferedInputStream(s.getInputStream))
-            val out = new DataOutputStream(new java.io.BufferedOutputStream(s.getOutputStream))
-            Zmtp.handshake(in, out, asServer = true, socketType = "PUB", accept = Set("SUB", "XSUB"))
-            s.setSoTimeout(0) // an idle subscriber is fine after the greeting
-            peer = new Peer(s, out)
-            peers.add(peer)
-            // consume subscribe/unsubscribe messages
-            var open = true
-            while (open) Zmtp.readMessage(in) match {
-              case Some(parts) if parts.nonEmpty && parts.head.nonEmpty =>
-                val m = parts.head
-                if (m(0) == 1) peer.prefixes.add(m.drop(1))
-                else if (m(0) == 0) {
-                  val p = m.drop(1)
-                  val it = peer.prefixes.iterator()
-                  var found: Array[Byte] = null
-                  while (found == null && it.hasNext) {
-                    val x = it.next(); if (x.sameElements(p)) found = x
-                  }
-                  if (found != null) peer.prefixes.remove(found)
-                }
-              case Some(_) => ()
-              case None => open = false
+  // the ZMTP handshake runs on the peer's thread under a read timeout:
+  // one peer that connects and never greets must not block accept() for
+  // every later subscriber
+  private val acceptor = new AcceptLoop(server, "zmq-pub")(s => () => {
+    var peer: Peer = null
+    try {
+      s.setSoTimeout(5000)
+      val in = new DataInputStream(new java.io.BufferedInputStream(s.getInputStream))
+      val out = new DataOutputStream(new java.io.BufferedOutputStream(s.getOutputStream))
+      Zmtp.handshake(in, out, asServer = true, socketType = "PUB", accept = Set("SUB", "XSUB"))
+      s.setSoTimeout(0) // an idle subscriber is fine after the greeting
+      peer = new Peer(s, out)
+      peers.add(peer)
+      // consume subscribe/unsubscribe messages
+      var open = true
+      while (open) Zmtp.readMessage(in) match {
+        case Some(parts) if parts.nonEmpty && parts.head.nonEmpty =>
+          val m = parts.head
+          if (m(0) == 1) peer.prefixes.add(m.drop(1))
+          else if (m(0) == 0) {
+            val p = m.drop(1)
+            val it = peer.prefixes.iterator()
+            var found: Array[Byte] = null
+            while (found == null && it.hasNext) {
+              val x = it.next(); if (x.sameElements(p)) found = x
             }
-          } catch {
-            // malformed frame / handshake timeout / anything: drop peer
-            case _: Throwable => ()
-          } finally {
-            if (peer != null) peers.remove(peer)
-            try s.close() catch { case _: Exception => () }
+            if (found != null) peer.prefixes.remove(found)
           }
-        }, s"zmq-pub-peer-$port")
-        reader.setDaemon(true)
-        reader.start()
-      } catch { case _: Exception if !running => () case _: Exception => () }
-  }, s"zmq-pub-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+        case Some(_) => ()
+        case None => open = false
+      }
+    } catch {
+      // malformed frame / handshake timeout / anything: drop peer
+      case _: Throwable => ()
+    } finally {
+      if (peer != null) peers.remove(peer)
+      try s.close() catch { case _: Exception => () }
+    }
+  })
 
   /** Publish [topic, payload] (or a single frame when topic is empty)
     * to every subscribed peer — the reference sink's sendToZmq shape.
@@ -243,12 +231,7 @@ final class ZmqPub private (server: ServerSocket) extends AutoCloseable {
   def peerCount: Int = peers.size()
 
   def close(): Unit = {
-    running = false
-    try server.close() catch { case _: Exception => () }
-    // the acceptor's in-flight accept() keeps the listening socket bound
-    // until the thread leaves it; wait, so the port can be rebound as
-    // soon as close() returns
-    acceptor.join(5000)
+    acceptor.close()
     peers.forEach(p => try p.socket.close() catch { case _: Exception => () })
     peers.clear()
   }

@@ -235,7 +235,7 @@ object PortablePlugins {
     * topic, and the stream's props) and route every frame the plugin
     * pushes into [[graft.sources.ConnectorFeed]] under
     * ("portable", topic) — from there the existing connector
-    * batch/stream/spool plumbing applies unchanged. Idempotent.
+    * batch/stream plumbing applies unchanged. Idempotent.
     */
   def ensureSource(plugin: String, symbol: String, topic: String,
                    props: Map[String, String] = Map.empty): Unit = {
@@ -405,7 +405,7 @@ final case class PortableConnectorSink(plugin: String, symbol: String,
 /** Portable SOURCE plugin as a stream/table source: the plugin pushes
   * frames on its bound channel; they land in the ConnectorFeed under
   * ("portable", topic), and batch/stream reads ride the existing
-  * connector spool plumbing (schema inference, formats, retention).
+  * connector feed plumbing (schema inference, formats, retention).
   */
 final case class PortableStreamSource(plugin: String, symbol: String,
                                       topic: String, schema: StructType,

@@ -374,6 +374,14 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
       rule.sinks.map(df -> _)
   }
 
+  /** One streaming query per output: `<id>_<tag><i>`, checkpoint `<ckpt>/<i>`. */
+  private def startStreams(rule: Rule, outputs: Seq[(DataFrame, Sink)],
+                           tag: String): Seq[StreamingQuery] =
+    outputs.zipWithIndex.map { case ((df, sink), i) =>
+      sink.writeStream(df, ownedQueryName(rule.id, s"${rule.id}_$tag$i"),
+        rule.triggerMs, rule.checkpointDir.map(c => s"$c/$i"))
+    }
+
   private def launch(slot: Slot, rule: Rule): Unit = {
     try {
       if (rule.streaming && rule.liveLookup) {
@@ -384,10 +392,7 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
       }
       val outputs: Seq[(DataFrame, Sink)] = planOutputs(rule)
       if (rule.streaming) {
-        slot.queries = outputs.zipWithIndex.map { case ((df, sink), i) =>
-          sink.writeStream(df, ownedQueryName(rule.id, s"${rule.id}_$i"),
-            rule.triggerMs, rule.checkpointDir.map(c => s"$c/$i"))
-        }
+        slot.queries = startStreams(rule, outputs, "")
         if (rule.restart.attempts > 0) monitor(slot, rule)
       } else {
         // piggyback the row counter on the sink's own action via
@@ -472,11 +477,7 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
               try {
                 slot.queries =
                   if (rule.liveLookup) launchLiveLookup(slot, rule)
-                  else planOutputs(rule).zipWithIndex.map { case ((df, sink), i) =>
-                    sink.writeStream(df,
-                      ownedQueryName(rule.id, s"${rule.id}_r${attempt}_$i"),
-                      rule.triggerMs, rule.checkpointDir.map(c => s"$c/$i"))
-                  }
+                  else startStreams(rule, planOutputs(rule), s"r${attempt}_")
                 slot.state = RuleState.Running
               } catch { case e: Exception =>
                 slot.state = RuleState.Failed(String.valueOf(e.getMessage)); done = true

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.TempDirs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -98,7 +99,7 @@ final case class MemorySource(topic: String) extends Source {
   */
 object MemoryHub {
   private val topics = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val spools = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val spools = new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
   private val appends = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
 
   /** Collapse the topic's union tree every N appends: a long-running
@@ -122,13 +123,12 @@ object MemoryHub {
     Option(topics.get(topic)).getOrElse(
       throw new NoSuchElementException(s"memory topic $topic"))
   def exists(topic: String): Boolean = topics.containsKey(topic)
-  def drop(topic: String): Unit = { topics.remove(topic); spools.remove(topic) }
+  /** Forget the topic and delete its spool directory. */
+  def drop(topic: String): Unit = { topics.remove(topic); Option(spools.remove(topic)).foreach(TempDirs.delete) }
 
-  /** Stable spool directory for a topic's streaming hand-off. */
+  /** Stable spool directory for a topic's streaming hand-off, kept until `drop` or JVM exit. */
   def spoolDir(topic: String): String =
-    spools.computeIfAbsent(topic, t =>
-      java.nio.file.Files.createTempDirectory(s"graft_hub_${t.replaceAll("\\W", "_")}_")
-        .toString)
+    spools.computeIfAbsent(topic, t => TempDirs.create(s"graft_hub_${t.replaceAll("\\W", "_")}_")).toString
 
   /** Append a batch to the topic's spool (called by MemorySink). */
   def spool(topic: String, df: DataFrame): Unit =
@@ -287,7 +287,7 @@ final case class ConnectorSource(kind: String, topic: String,
 
   /** With a SERVER DDL option the transport is REAL: a long-lived
     * subscriber ([[graft.net.FeedBridges]]) connects to the broker and
-    * spools every received frame into this feed, so broker messages
+    * pushes every received frame into this feed, so broker messages
     * flow to the rule as micro-batches (reference model: one
     * subscriber connection per stream, internal/io/mqtt/source.go).
     * Without SERVER the feed stays test-injectable via
@@ -339,10 +339,9 @@ final case class ConnectorSource(kind: String, topic: String,
     decode(spark, ConnectorFeed.frames(spark, kind, topic))
   }
 
-  /** Real unbounded stream: readStream over the feed's spool directory,
-    * so a streaming rule sees every pushed frame as a fresh micro-batch
-    * (the MemoryHub pattern). Executors read the spool directly — no
-    * frame passes through the driver after the transport hands it off.
+  /** Real unbounded stream: a micro-batch source over the feed's
+    * in-memory log ([[ConnectorFeedProvider]]), so a streaming rule sees
+    * the frames pushed since its last batch as the next micro-batch.
     */
   def stream(spark: SparkSession): DataFrame = {
     ensureTransport()
@@ -354,181 +353,4 @@ object ConnectorSource {
   val kinds: Set[String] =
     Set("mqtt", "http_pull", "http_push", "websocket", "sse", "redis", "neuron", "edgex", "kafka",
       "sql", "zmq", "portable") // portable: frames pushed by a plugin process
-}
-
-/** STUB transport feed for ConnectorSource — deterministic, in-memory,
-  * test-injectable. A real deployment replaces this object with a
-  * broker client; nothing else changes.
-  */
-object ConnectorFeed {
-  /** Retention knobs. A long-running bridge on a busy broker must not
-    * grow driver memory or spool listing cost without bound (the
-    * reference's runtime consumes frames and discards them,
-    * internal/io/mqtt/source.go — nothing there accumulates either):
-    *  - memCap: frames kept in the in-memory ring, which only serves
-    *    batch reads and schema inference (streams read the spool);
-    *  - spoolMaxFiles / spoolMaxAgeMs: oldest frame files beyond the
-    *    count cap or older than the age cap are pruned. A stream that
-    *    keeps up sees every frame exactly once; one lagging further
-    *    than the caps loses the overflow — QoS0, like the reference;
-    *  - burstFilesPerSec: above this push rate, frames are batched by
-    *    a background flusher into one multi-line file per
-    *    flushIntervalMs instead of one file per frame, bounding file
-    *    creation (and thus listing cost between prunes) at any
-    *    message rate. Below it every push writes synchronously, so
-    *    low-rate pushes are immediately visible to
-    *    `processAllAvailable`-style readers.
-    */
-  @volatile var memCap: Int = 4096
-  @volatile var spoolMaxFiles: Int = 8192
-  @volatile var spoolMaxAgeMs: Long = 60 * 60 * 1000L
-  @volatile var burstFilesPerSec: Int = 50
-  @volatile var flushIntervalMs: Long = 25L
-  @volatile var pruneEveryFiles: Int = 256
-
-  private final class FeedState {
-    val ring = new scala.collection.mutable.ArrayDeque[(String, Long)]()
-    val pending = new scala.collection.mutable.ArrayBuffer[String]()
-    var windowStartMs = 0L     // current 1-second rate window
-    var filesThisWindow = 0
-    var filesSincePrune = 0
-  }
-
-  private val feeds =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), FeedState]()
-  private val spools =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private val seq = new java.util.concurrent.atomic.AtomicLong()
-
-  // Lazily-started daemon that drains `pending` buffers accumulated
-  // while a feed is over its burst threshold.
-  private lazy val flusher = {
-    val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-      val t = new Thread(r, "graft-feed-flusher"); t.setDaemon(true); t
-    }
-    ex.scheduleWithFixedDelay(() => flushAllPending(),
-      flushIntervalMs, flushIntervalMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-    ex
-  }
-
-  private def flushAllPending(): Unit = {
-    val it = feeds.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val st = e.getValue
-      try st.synchronized { if (st.pending.nonEmpty) writeLocked(e.getKey, st, st.pending.toSeq) }
-      catch { case _: Exception => () } // keep the flusher alive; retry next tick
-    }
-  }
-
-  /** Write `lines` as ONE spool file (callers hold st's lock) and
-    * clear the pending buffer; prune the spool periodically.
-    */
-  private def writeLocked(key: (String, String), st: FeedState, lines: Seq[String]): Unit = {
-    val dir = java.nio.file.Paths.get(spoolDir(key._1, key._2))
-    val name = f"frame_${seq.incrementAndGet()}%012d.json"
-    val tmp = dir.resolve(name + ".tmp")
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.write(tmp, lines.asJava)
-    java.nio.file.Files.move(tmp, dir.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    st.pending.clear()
-    st.filesSincePrune += 1
-    if (st.filesSincePrune >= pruneEveryFiles) {
-      st.filesSincePrune = 0
-      prune(dir.toFile)
-    }
-  }
-
-  private def prune(dir: java.io.File): Unit = {
-    val files = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.matches("frame_\\d+\\.json")).sortBy(_.getName)
-    val overCount = files.length - spoolMaxFiles
-    val cutoffMs = System.currentTimeMillis() - spoolMaxAgeMs
-    files.zipWithIndex.foreach { case (f, i) =>
-      if (i < overCount || f.lastModified() < cutoffMs) f.delete()
-    }
-  }
-
-  /** Spool directory backing the streaming form of a feed: each push
-    * lands as one JSON-lines file, which Structured Streaming's file
-    * source picks up as a new micro-batch.
-    */
-  def spoolDir(kind: String, topic: String): String =
-    spools.computeIfAbsent((kind, topic), { case (k, t) =>
-      java.nio.file.Files.createTempDirectory(
-        s"graft_feed_${k}_${t.replaceAll("\\W", "_")}_").toString
-    })
-
-  private def jsonQuote(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
-  }
-
-  /** Live bridges and tests push (frame, arrivalMillis). The frame
-    * always reaches both the bounded in-memory ring and the spool;
-    * spool files are written via a non-matching temp name + atomic
-    * rename, so the tailing file-stream source (which lists by name
-    * and reads each exactly once) never sees a half-written file.
-    */
-  def push(kind: String, topic: String, frameJson: String, arrivalMs: Long): Unit = {
-    val key = (kind, topic)
-    val st = feeds.computeIfAbsent(key, _ => new FeedState)
-    val line = s"""{"frame": ${jsonQuote(frameJson)}, "arrival_ms": $arrivalMs}"""
-    st.synchronized {
-      st.ring.append((frameJson, arrivalMs))
-      while (st.ring.length > memCap) st.ring.removeHead()
-      val now = System.currentTimeMillis()
-      if (now - st.windowStartMs >= 1000L) { st.windowStartMs = now; st.filesThisWindow = 0 }
-      st.pending += line
-      if (st.filesThisWindow < burstFilesPerSec) {
-        // low rate: flush synchronously (one file per push) so the
-        // frame is immediately visible to the streaming source
-        st.filesThisWindow += 1
-        writeLocked(key, st, st.pending.toSeq)
-      } else flusher // over threshold: leave buffered for the batch flusher
-    }
-  }
-
-  def clear(kind: String, topic: String): Unit = {
-    feeds.remove((kind, topic))
-    // delete spooled frame files but KEEP the directory mapping: the
-    // dir is reused after clear, so frames pushed later stay visible
-    // to already-running streams (file names are globally sequenced —
-    // the file-stream source never re-reads a seen name) and repeated
-    // clear/push cycles don't leak temp directories.
-    Option(spools.get((kind, topic))).foreach { dir =>
-      val d = new java.io.File(dir)
-      Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith("frame_")).foreach(_.delete())
-    }
-  }
-
-  /** Unbounded (frame, arrival_ts) stream over the spool. */
-  def frameStream(spark: SparkSession, kind: String, topic: String): DataFrame =
-    spark.readStream
-      .schema(StructType.fromDDL("frame string, arrival_ms bigint"))
-      .json(spoolDir(kind, topic))
-      .select(col("frame"), timestamp_millis(col("arrival_ms")).as("arrival_ts"))
-
-  def frames(spark: SparkSession, kind: String, topic: String): DataFrame = {
-    val rows = Option(feeds.get((kind, topic))) match {
-      case Some(st) => st.synchronized(st.ring.toVector)
-      case None => Vector.empty[(String, Long)]
-    }
-    import scala.jdk.CollectionConverters._
-    val df = spark.createDataFrame(
-      rows.map { case (f, ts) => org.apache.spark.sql.Row(f, ts) }.asJava,
-      StructType.fromDDL("frame string, arrival_ms bigint"))
-    df.select(col("frame"), timestamp_millis(col("arrival_ms")).as("arrival_ts"))
-  }
 }

@@ -68,8 +68,8 @@ object SqlDialect {
   *    reader options (driver, numPartitions, partitionColumn,
   *    lowerBound, upperBound, fetchsize) pass through from `options`.
   *  - `stream` = a bridge thread pulling every `intervalMs` and
-  *    spooling rows as JSON frames into [[ConnectorFeed]]; the rule
-  *    tails the spool as micro-batches like every other connector.
+  *    pushing rows as JSON frames into [[ConnectorFeed]]; the rule
+  *    reads the feed as micro-batches like every other connector.
   *  - `offset`/`rewind` mirror the reference's GetOffset/Rewind for
   *    checkpoint recovery.
   */

@@ -122,7 +122,7 @@ class AnalyticSqlSpec extends SparkSuite {
   }
 
   test("batch rule through the engine: analytic SQL end to end") {
-    val dir = Files.createTempDirectory("graft_analytic_rule")
+    val dir = tempDir("graft_analytic_rule")
     Files.write(dir.resolve("part-0.json"), Seq(
       """{"device":"d1","temp":50,"ts":1}""",
       """{"device":"d1","temp":50,"ts":2}""",

@@ -64,7 +64,7 @@ class ClassifierSpec extends SparkSuite {
 
   test("weight persistence: save/load round-trips exactly; loaded weights score identically") {
     val w = Classifier.train(planted(200), "text", "y", dim = 1 << 10, iters = 10)
-    val dir = java.nio.file.Files.createTempDirectory("clf_w").toString
+    val dir = tempDir("clf_w").toString
     try {
       Classifier.save(spark, w, dir)
       val back = Classifier.load(spark, dir)

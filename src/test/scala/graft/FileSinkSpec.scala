@@ -22,8 +22,6 @@ import org.apache.spark.sql.types.StructType
 class FileSinkSpec extends SparkSuite {
   private val PartFile = """part-(\d{5})-([0-9a-f-]{36})-c(\d{3})\.json""".r
 
-  private def tempDir(prefix: String): NioPath = Files.createTempDirectory(prefix)
-
   private def names(dir: NioPath): Set[String] = dir.toFile.list().toSet
 
   /** Each part file's bytes, keyed by partition and file index (the
@@ -158,8 +156,8 @@ class FileSinkSpec extends SparkSuite {
   }
 
   test("a task retried after failing mid-partition leaves every row once and no file of the failed attempt") {
-    val out = tempDir("graft-retry").resolve("out")
-    val log = Files.createTempFile("graft-retry", ".log")
+    val dir = tempDir("graft-retry")
+    val (out, log) = (dir.resolve("out"), dir.resolve("child.log"))
     val jvmOpens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
       .asScala.filter(_.startsWith("--add-opens")).toSeq
     val cmd = Seq(System.getProperty("java.home") + "/bin/java", "-Xmx768m") ++ jvmOpens ++
@@ -211,7 +209,7 @@ class FileSinkSpec extends SparkSuite {
       rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()
       try (1 to 3).foreach(batch) finally rec.stop()
-      val jfr = Files.createTempFile("graft-forks", ".jfr")
+      val jfr = tempDir("graft-forks").resolve("forks.jfr")
       rec.dump(jfr)
       rec.close()
       rules.foreach { case (id, _) =>

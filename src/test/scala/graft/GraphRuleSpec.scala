@@ -11,7 +11,7 @@ import java.nio.file.Files
 class GraphRuleSpec extends SparkSuite {
 
   test("filter → aggregate → memory sink pipeline") {
-    val dir = Files.createTempDirectory("graft_graph_in")
+    val dir = tempDir("graft_graph_in")
     Files.write(dir.resolve("in.json"),
       Seq("""{"device":"d1","temp":30}""", """{"device":"d1","temp":40}""",
           """{"device":"d2","temp":10}""", """{"device":"d2","temp":35}""")
@@ -220,8 +220,8 @@ class GraphRuleSpec extends SparkSuite {
   }
 
   test("streaming graph: watermark + window nodes gate and aggregate event time") {
-    val dir = Files.createTempDirectory("graft_graph_wm")
-    val ckpt = Files.createTempDirectory("graft_graph_wm_ckpt")
+    val dir = tempDir("graft_graph_wm")
+    val ckpt = tempDir("graft_graph_wm_ckpt")
     Files.write(dir.resolve("a.json"),
       Seq("""{"device":"a","temp":30,"ts":"2024-01-01T10:00:05"}""",
           """{"device":"b","temp":40,"ts":"2024-01-01T10:00:15"}""",
@@ -270,8 +270,8 @@ class GraphRuleSpec extends SparkSuite {
   }
 
   test("streaming graph rule delivers incrementally") {
-    val dir = Files.createTempDirectory("graft_graph_stream")
-    val ckpt = Files.createTempDirectory("graft_graph_ckpt")
+    val dir = tempDir("graft_graph_stream")
+    val ckpt = tempDir("graft_graph_ckpt")
     Files.write(dir.resolve("a.json"), """{"device":"a","temp":30}""".getBytes)
     val eng = new RuleEngine(spark)
     eng.createStream(
@@ -298,7 +298,7 @@ class GraphRuleSpec extends SparkSuite {
   }
 
   test("switch node routes rows to branches; stopAtFirstMatch makes them disjoint") {
-    val dir = Files.createTempDirectory("graft_switch_in")
+    val dir = tempDir("graft_switch_in")
     Files.write(dir.resolve("in.json"),
       Seq("""{"device":"d1","temp":30}""", """{"device":"d2","temp":15}""",
           """{"device":"d3","temp":40}""", """{"device":"d4","temp":5}""")
@@ -347,7 +347,7 @@ class GraphRuleSpec extends SparkSuite {
   }
 
   test("reference JSON shape runs verbatim: nodeType/props, topo.edges, rule wrapper") {
-    val dir = Files.createTempDirectory("graft_graph_ref")
+    val dir = tempDir("graft_graph_ref")
     Files.write(dir.resolve("in.json"),
       Seq("""{"device":"a","humidity":40}""", """{"device":"b","humidity":20}""",
           """{"device":"c","humidity":55}""").mkString("\n").getBytes)
@@ -436,7 +436,7 @@ class GraphRuleSpec extends SparkSuite {
   }
 
   test("inline source node: nodeType + stream props, no pre-registered stream") {
-    val dir = Files.createTempDirectory("graft_graph_inline")
+    val dir = tempDir("graft_graph_inline")
     Files.write(dir.resolve("in.json"),
       Seq("""{"k":"x","v":1}""", """{"k":"y","v":2}""").mkString("\n").getBytes)
     val eng = new RuleEngine(spark)

@@ -214,7 +214,7 @@ class KnnSpec extends SparkSuite {
     val emb = Tables(spark, sf, "embeddings")
     val cents = Knn.trainIvfCentroids(emb, "vec_id", "embedding", cells = 8)
     val cb = Knn.trainPqCodebooks(emb, "vec_id", "embedding", m = 8, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_index").toString
+    val dir = tempDir("graft_index").toString
     try {
       Knn.saveIvfIndex(spark, cents, s"$dir/ivf")
       Knn.savePqCodebooks(spark, cb, s"$dir/pq")

@@ -73,7 +73,7 @@ class LayoutSpec extends SparkSuite {
   test("sharded export: stable content-addressed shards, bounded files, lossless") {
     import org.apache.spark.sql.functions.col
     val docs = Tables(spark, sf, "documents").select("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = tempDir("graft_shards").toString
     try {
       Layout.exportShards(docs, out, "text", shards = 4, maxRecordsPerFile = 50)
       val back = spark.read.parquet(out)
@@ -93,7 +93,7 @@ class LayoutSpec extends SparkSuite {
       }
       // shard assignment is content-addressed: a re-export of a GROWN
       // corpus keeps the original rows in the same shards
-      val out2 = java.nio.file.Files.createTempDirectory("graft_shards2").toString
+      val out2 = tempDir("graft_shards2").toString
       try {
         Layout.exportShards(docs.unionByName(
           docs.limit(10).select((col("doc_id") + 900000).as("doc_id"),

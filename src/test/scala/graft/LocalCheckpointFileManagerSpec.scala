@@ -40,7 +40,7 @@ class LocalCheckpointFileManagerSpec extends SparkSuite {
     dir.toFile.list().toSet
 
   test("a file appears only on close; cancel leaves neither the file nor a temp file") {
-    val dir = Files.createTempDirectory("graft-ckfm")
+    val dir = tempDir("graft-ckfm")
     val fm = manager(dir)
     val target = new Path(dir.resolve("0").toUri)
     val out = fm.createAtomic(target, overwriteIfPossible = false)
@@ -60,7 +60,7 @@ class LocalCheckpointFileManagerSpec extends SparkSuite {
   }
 
   test("a no-overwrite create over an existing file throws and keeps the old bytes") {
-    val dir = Files.createTempDirectory("graft-ckfm")
+    val dir = tempDir("graft-ckfm")
     val fm = manager(dir)
     val target = new Path(dir.resolve("7").toUri)
     write(fm, target, "old", overwrite = false)
@@ -72,7 +72,7 @@ class LocalCheckpointFileManagerSpec extends SparkSuite {
   }
 
   test("overwriting a file LocalFileSystem wrote drops its stale .crc") {
-    val dir = Files.createTempDirectory("graft-ckfm")
+    val dir = tempDir("graft-ckfm")
     val lfs = FileSystem.getLocal(conf)
     val target = new Path(dir.resolve("1.delta").toUri)
     val o = lfs.create(target)
@@ -86,7 +86,7 @@ class LocalCheckpointFileManagerSpec extends SparkSuite {
   }
 
   test("a path on another scheme goes to Spark's default manager") {
-    val dir = Files.createTempDirectory("graft-ckfm")
+    val dir = tempDir("graft-ckfm")
     val c = new Configuration(conf)
     c.set("fs.graftlocal.impl", classOf[TestSchemeFileSystem].getName)
     c.setBoolean("fs.graftlocal.impl.disable.cache", true)
@@ -109,9 +109,9 @@ class LocalCheckpointFileManagerSpec extends SparkSuite {
   test("starting a query installs the manager unless the session names its own") {
     import LocalCheckpointFileManager.ConfKey
     def run(session: org.apache.spark.sql.SparkSession): NioPath = {
-      val in = Files.createTempDirectory("graft-ckfm-in")
+      val in = tempDir("graft-ckfm-in")
       Files.write(in.resolve("a.json"), """{"x":1}""".getBytes(UTF_8))
-      val ckpt = Files.createTempDirectory("graft-ckfm-q")
+      val ckpt = tempDir("graft-ckfm-q")
       val q = Sink.startQuery(session.readStream.schema("x INT").json(in.toString),
         s"ckfm_${ckpt.getFileName}", 0, Some(ckpt.toString))(
         _.foreachBatch((_: DataFrame, _: Long) => ()))

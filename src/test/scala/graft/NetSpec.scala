@@ -358,7 +358,7 @@ class NetSpec extends SparkSuite {
   test("e2e streaming rule: broker-fed stream filters back to the broker incrementally") {
     val broker = MqttBroker.start()
     val eng = new graft.rules.RuleEngine(spark)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_net_ck")
+    val ckpt = tempDir("graft_net_ck")
     try {
       ConnectorFeed.clear("mqtt", "live/in")
       eng.createStream(
@@ -788,86 +788,116 @@ class NetSpec extends SparkSuite {
 
   // ---- bounded connector feed (long-run retention) ----
 
-  test("feed bounds: ring cap holds newest frames; burst pushes batch into few spool files") {
-    val saved = (ConnectorFeed.memCap, ConnectorFeed.burstFilesPerSec)
+  /** Frames `i` a stream over `topic` delivers to a foreachBatch sink. */
+  private def feedStream(topic: String, ckpt: Option[String] = None)
+      : (org.apache.spark.sql.streaming.StreamingQuery, ConcurrentLinkedQueue[Long]) = {
+    val got = new ConcurrentLinkedQueue[Long]()
+    val w = ConnectorSource("mqtt", topic, StructType.fromDDL("i bigint")).stream(spark)
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.select("i").collect().foreach(r => got.add(r.getLong(0)))
+      }
+    (ckpt.fold(w)(c => w.option("checkpointLocation", c)).start(), got)
+  }
+
+  private def pushI(topic: String, is: Range): Unit =
+    is.foreach(i => ConnectorFeed.push("mqtt", topic, s"""{"i":$i}""", i.toLong))
+
+  test("feed bounds: the batch ring holds the newest memCap frames") {
+    val saved = ConnectorFeed.memCap
     ConnectorFeed.memCap = 100
-    ConnectorFeed.burstFilesPerSec = 10
     try {
-      ConnectorFeed.clear("mqtt", "bounded/burst")
-      val spool = new java.io.File(ConnectorFeed.spoolDir("mqtt", "bounded/burst"))
-      (1 to 2000).foreach(i =>
-        ConnectorFeed.push("mqtt", "bounded/burst", s"""{"i":$i}""", i.toLong))
-      // driver memory: only the newest memCap frames are retained
-      val mem = ConnectorFeed.frames(spark, "mqtt", "bounded/burst")
-      assert(mem.count() === 100)
-      assert(mem.agg(max(get_json_object(col("frame"), "$.i").cast("long")))
-        .first().getLong(0) === 2000)
-      // spool: the flusher drains every frame (none lost) …
-      def spoolLines: Int = spool.listFiles()
-        .filter(_.getName.matches("frame_\\d+\\.json"))
-        .map(f => java.nio.file.Files.readAllLines(f.toPath).size).sum
-      awaitCond(spoolLines == 2000, s"all frames spooled (have $spoolLines)")
-      // … but into far fewer files than frames: ≤10 sync files per
-      // second of wall time plus ~40 batch files/sec from the flusher
-      val files = spool.listFiles().count(_.getName.matches("frame_\\d+\\.json"))
-      assert(files < 500, s"burst batching should bound file count, got $files")
-      assert(files < 2000)
+      ConnectorFeed.clear("mqtt", "bounded/ring")
+      pushI("bounded/ring", 1 to 2000)
+      val mem = ConnectorFeed.frames(spark, "mqtt", "bounded/ring")
+        .select(get_json_object(col("frame"), "$.i").cast("long")).collect().map(_.getLong(0))
+      assert(mem.toSeq === (1901L to 2000L))
     } finally {
-      ConnectorFeed.memCap = saved._1
-      ConnectorFeed.burstFilesPerSec = saved._2
-      ConnectorFeed.clear("mqtt", "bounded/burst")
+      ConnectorFeed.memCap = saved
+      ConnectorFeed.clear("mqtt", "bounded/ring")
     }
   }
 
-  test("feed bounds: spool prune caps retained files; stream under burst sees frames exactly once") {
-    val saved = (ConnectorFeed.spoolMaxFiles, ConnectorFeed.pruneEveryFiles,
-      ConnectorFeed.burstFilesPerSec)
-    // prune check on every write, cap at 30 files
-    ConnectorFeed.spoolMaxFiles = 30
-    ConnectorFeed.pruneEveryFiles = 1
-    ConnectorFeed.burstFilesPerSec = Int.MaxValue // one file per push → exercises prune
+  test("feed stream: two streams over one feed each see every frame exactly once") {
+    ConnectorFeed.clear("mqtt", "bounded/fanout")
+    val (q1, got1) = feedStream("bounded/fanout")
+    val (q2, got2) = feedStream("bounded/fanout")
     try {
-      ConnectorFeed.clear("mqtt", "bounded/prune")
-      val spool = new java.io.File(ConnectorFeed.spoolDir("mqtt", "bounded/prune"))
-      (1 to 200).foreach(i =>
-        ConnectorFeed.push("mqtt", "bounded/prune", s"""{"i":$i}""", i.toLong))
-      val files = spool.listFiles().filter(_.getName.matches("frame_\\d+\\.json"))
-      assert(files.length <= 31, s"prune should cap spool files, got ${files.length}")
-      // the newest frames survive the prune (oldest were deleted);
-      // spool line format escapes the frame: {"frame": "{\"i\":200}", …}
+      pushI("bounded/fanout", 1 to 300) // tight loop, while both streams run
+      Seq(q1, q2).foreach(_.processAllAvailable())
       import scala.jdk.CollectionConverters._
-      val survivors = files.flatMap(f => java.nio.file.Files.readAllLines(f.toPath).asScala)
-      assert(survivors.exists(_.contains("\\\"i\\\":200}")), "newest frame retained")
-      assert(!survivors.exists(_.contains("\\\"i\\\":1}")), "oldest pruned")
+      assert(got1.asScala.toSeq.sorted === (1L to 300L))
+      assert(got2.asScala.toSeq.sorted === (1L to 300L))
+      pushI("bounded/fanout", 301 to 310)
+      Seq(q1, q2).foreach(_.processAllAvailable())
+      assert(got1.asScala.toSeq.sorted === (1L to 310L))
+      assert(got2.asScala.toSeq.sorted === (1L to 310L))
     } finally {
-      ConnectorFeed.spoolMaxFiles = saved._1
-      ConnectorFeed.pruneEveryFiles = saved._2
-      ConnectorFeed.burstFilesPerSec = saved._3
-      ConnectorFeed.clear("mqtt", "bounded/prune")
+      q1.stop(); q2.stop()
+      ConnectorFeed.clear("mqtt", "bounded/fanout")
     }
+  }
 
-    // exactly-once delivery to a live stream while the flusher batches
-    val savedBurst = ConnectorFeed.burstFilesPerSec
-    ConnectorFeed.burstFilesPerSec = 5
+  test("feed stream: a stream lagging more than memCap frames gets only the newest memCap") {
+    val saved = ConnectorFeed.memCap
+    ConnectorFeed.memCap = 100
+    val ckpt = tempDir("graft_feed_lag_ck").toString
     try {
-      ConnectorFeed.clear("mqtt", "bounded/stream")
-      val src = ConnectorSource("mqtt", "bounded/stream",
-        StructType.fromDDL("i bigint"))
-      val q = src.stream(spark).writeStream.format("memory")
-        .queryName("bounded_stream_out").outputMode("append").start()
-      try {
-        (1 to 300).foreach(i =>
-          ConnectorFeed.push("mqtt", "bounded/stream", s"""{"i":$i}""", i.toLong))
-        awaitCond({
-          q.processAllAvailable()
-          spark.table("bounded_stream_out").count() == 300
-        }, "all 300 burst frames reach the stream")
-        assert(spark.table("bounded_stream_out").select("i").distinct().count() === 300)
-      } finally q.stop()
+      ConnectorFeed.clear("mqtt", "bounded/lag")
+      pushI("bounded/lag", 1 to 10)
+      val (q1, got1) = feedStream("bounded/lag", Some(ckpt))
+      try q1.processAllAvailable() finally q1.stop()
+      import scala.jdk.CollectionConverters._
+      assert(got1.asScala.toSeq.sorted === (1L to 10L))
+      // the stream is down while 300 frames arrive: it resumes 300 behind
+      pushI("bounded/lag", 11 to 310)
+      val (q2, got2) = feedStream("bounded/lag", Some(ckpt))
+      try q2.processAllAvailable() finally q2.stop()
+      assert(got2.asScala.toSeq.sorted === (211L to 310L))
     } finally {
-      ConnectorFeed.burstFilesPerSec = savedBurst
-      ConnectorFeed.clear("mqtt", "bounded/stream")
+      ConnectorFeed.memCap = saved
+      ConnectorFeed.clear("mqtt", "bounded/lag")
     }
+  }
+
+  test("feed stream: a checkpoint from another process resumes at the retained log") {
+    val ckpt = tempDir("graft_feed_epoch_ck")
+    ConnectorFeed.clear("mqtt", "bounded/epoch")
+    try {
+      val (q1, _) = feedStream("bounded/epoch", Some(ckpt.toString))
+      try {
+        pushI("bounded/epoch", 1 to 2); q1.processAllAvailable()
+        pushI("bounded/epoch", 3 to 5); q1.processAllAvailable()
+      } finally q1.stop()
+      // pretend another JVM wrote the checkpoint: its offsets carry a
+      // foreign epoch, and its last batch never committed
+      import scala.jdk.CollectionConverters._
+      val offsets = java.nio.file.Files.list(ckpt.resolve("offsets")).iterator().asScala
+        .filter(_.getFileName.toString.forall(_.isDigit)).toSeq
+      assert(offsets.size >= 2)
+      offsets.foreach { f =>
+        val txt = new String(java.nio.file.Files.readAllBytes(f), StandardCharsets.UTF_8)
+        java.nio.file.Files.write(f, txt.replaceAll(""""epoch":"[^"]*"""", """"epoch":"elsewhere"""")
+          .getBytes(StandardCharsets.UTF_8))
+        java.nio.file.Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+      }
+      val last = offsets.map(_.getFileName.toString.toLong).max
+      java.nio.file.Files.delete(ckpt.resolve(s"commits/$last"))
+      pushI("bounded/epoch", 6 to 8)
+      val (q2, got2) = feedStream("bounded/epoch", Some(ckpt.toString))
+      try q2.processAllAvailable() finally q2.stop()
+      assert(got2.asScala.toSeq.sorted === (1L to 8L))
+    } finally ConnectorFeed.clear("mqtt", "bounded/epoch")
+  }
+
+  test("feed: pushing frames writes nothing under java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftEntries = tmp.list().filter(_.startsWith("graft")).toSet
+    val before = graftEntries
+    ConnectorFeed.clear("mqtt", "bounded/nofiles")
+    pushI("bounded/nofiles", 1 to 500)
+    assert(ConnectorFeed.frames(spark, "mqtt", "bounded/nofiles").count() === 500)
+    assert(graftEntries -- before === Set.empty[String])
+    ConnectorFeed.clear("mqtt", "bounded/nofiles")
   }
 }
 
@@ -878,7 +908,7 @@ class NetSpec extends SparkSuite {
   */
 object TlsTestCerts {
   lazy val (certPath: String, keyPath: String) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tls")
+    val dir = TempDirs.create("graft-tls")
     val ks = dir.resolve("ks.p12")
     import scala.sys.process._
     val rc = Seq("keytool", "-genkeypair", "-alias", "graft", "-keyalg", "RSA",

@@ -39,6 +39,18 @@ class NngSpec extends SparkSuite {
     } finally daemon.close()
   }
 
+  test("nng listener: a closed listener's port can be rebound at once") {
+    // the acceptor thread sits in accept(); close() must not return
+    // while that call still holds the listening socket
+    for (_ <- 1 to 50) {
+      val daemon = NngListener.bind()
+      val port = daemon.port
+      Thread.sleep(5)
+      daemon.close()
+      NngListener.bind(port).close()
+    }
+  }
+
   test("nng pair: protocol mismatch is refused at handshake") {
     // a raw socket sending a PUB (32) header must be rejected by PAIR
     val daemon = NngListener.bind()

@@ -103,7 +103,7 @@ class PcaSpec extends SparkSuite {
 
   test("model persistence: save/load round-trips the fit exactly") {
     val model = Pca.fit(planted(200), "embedding", 3)
-    val dir = java.nio.file.Files.createTempDirectory("pca_idx").toString
+    val dir = tempDir("pca_idx").toString
     try {
       Pca.save(spark, model, dir)
       val back = Pca.load(spark, dir)

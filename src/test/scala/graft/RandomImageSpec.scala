@@ -43,7 +43,7 @@ class RandomImageSpec extends SparkSuite {
 
   test("image sink: binary columns decode and persist in the target format") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_img_").toString
+    val dir = tempDir("graft_img_").toString
     val df = Seq(
       (pngBytes(4, 4, 0xff0000), "a"),
       (pngBytes(8, 8, 0x00ff00), "b")).toDF("frame", "label")
@@ -57,14 +57,14 @@ class RandomImageSpec extends SparkSuite {
 
   test("image sink: undecodable bytes fail the batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_img_bad_").toString
+    val dir = tempDir("graft_img_bad_").toString
     val bad = Seq((Array[Byte](1, 2, 3), "x")).toDF("frame", "label")
     intercept[Exception](ImageSink(dir, "png").writeBatch(bad))
   }
 
   test("image sink: maxCount retention keeps the newest files") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_img_keep_").toString
+    val dir = tempDir("graft_img_keep_").toString
     val sink = ImageSink(dir, "png", maxCount = 3)
     (1 to 5).foreach { i =>
       sink.writeBatch(Seq((pngBytes(2, 2, i), s"i$i")).toDF("frame", "label"))

@@ -75,7 +75,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("ruleset routes alias the data document; tables map imports as DDL") {
-    val dir = Files.createTempDirectory("graft_rs_in")
+    val dir = tempDir("graft_rs_in")
     Files.write(dir.resolve("a.json"), """{"x":1}""".getBytes)
     val a = api
     val doc =
@@ -91,7 +91,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("async data import: task lifecycle register/running -> finish, cancel rules") {
-    val dir = Files.createTempDirectory("graft_async_in")
+    val dir = tempDir("graft_async_in")
     Files.write(dir.resolve("a.json"), """{"x":9}""".getBytes)
     val a = api
     val doc =
@@ -147,7 +147,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("rule lifecycle via the endpoint surface") {
-    val dir = Files.createTempDirectory("graft_api_in")
+    val dir = tempDir("graft_api_in")
     Files.write(dir.resolve("a.json"), """{"x":1}
 {"x":5}""".getBytes)
     val a = api
@@ -172,7 +172,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("rule tracing: start -> run -> retrieve spans -> stop (batch rule)") {
-    val dir = Files.createTempDirectory("graft_trc_in")
+    val dir = tempDir("graft_trc_in")
     Files.write(dir.resolve("a.json"), """{"x":1}
 {"x":5}""".getBytes)
     val eng = new RuleEngine(spark)
@@ -224,8 +224,8 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("streaming rule tracing captures micro-batch progress spans") {
-    val dir = Files.createTempDirectory("graft_strc_in")
-    val ckpt = Files.createTempDirectory("graft_strc_ck")
+    val dir = tempDir("graft_strc_in")
+    val ckpt = tempDir("graft_strc_ck")
     Files.write(dir.resolve("a.json"), """{"x":7}""".getBytes)
     val eng = new RuleEngine(spark)
     val a = new RuleApi(eng)
@@ -257,7 +257,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("export captures definitions; import restores them on a fresh engine") {
-    val dir = Files.createTempDirectory("graft_exp_in")
+    val dir = tempDir("graft_exp_in")
     Files.write(dir.resolve("a.json"), """{"x":4}""".getBytes)
     graft.plugins.JsFunctions.clear() // scripts from other suites would skew the export doc
     val a = api
@@ -282,7 +282,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("import applies per item and reports failures instead of aborting") {
-    val dir = Files.createTempDirectory("graft_imp_part")
+    val dir = tempDir("graft_imp_part")
     Files.write(dir.resolve("a.json"), """{"x":7}""".getBytes)
     val a = new RuleApi(new RuleEngine(spark))
     // middle rule collides with an existing id → fails at create; the
@@ -338,7 +338,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("metrics endpoint aggregates every rule's counters") {
-    val dir = Files.createTempDirectory("graft_met_in")
+    val dir = tempDir("graft_met_in")
     Files.write(dir.resolve("a.json"), """{"x":1}
 {"x":2}""".getBytes)
     val a = api
@@ -353,7 +353,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("prometheus metrics: scrape-parseable text exposition with per-rule series") {
-    val dir = Files.createTempDirectory("graft_prom_in")
+    val dir = tempDir("graft_prom_in")
     Files.write(dir.resolve("a.json"), """{"x":1}
 {"x":2}
 {"x":3}""".getBytes)
@@ -388,8 +388,8 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("prometheus metrics: a streaming rule's last micro-batch phase times") {
-    val dir = Files.createTempDirectory("graft_phase_in")
-    val ckpt = Files.createTempDirectory("graft_phase_ck")
+    val dir = tempDir("graft_phase_in")
+    val ckpt = tempDir("graft_phase_ck")
     Files.write(dir.resolve("a.json"), """{"x":1}""".getBytes)
     val eng = new RuleEngine(spark)
     val a = new RuleApi(eng)
@@ -420,7 +420,7 @@ class RuleApiSpec extends SparkSuite {
   }
 
   test("cron-scheduled rule JSON (reference cron + duration options) is accepted") {
-    val dir = Files.createTempDirectory("graft_cron_in")
+    val dir = tempDir("graft_cron_in")
     Files.write(dir.resolve("a.json"), """{"x":3}""".getBytes)
     val a = api
     a.handle("POST", "/streams",
@@ -819,7 +819,7 @@ class RuleApiSpec extends SparkSuite {
 
   test("trace strategy: head captures only the first N units; always is unlimited; POST /tracer stores config") {
     val a = api
-    val dir = Files.createTempDirectory("graft_hstrat_in")
+    val dir = tempDir("graft_hstrat_in")
     Files.write(dir.resolve("a.json"), """{"v":1}""".getBytes)
     a.handle("POST", "/streams",
       s"""{"sql": "CREATE STREAM hstrat_s (v BIGINT) WITH (TYPE=\\"file\\", FORMAT=\\"json\\", DATASOURCE=\\"$dir\\")"}""")

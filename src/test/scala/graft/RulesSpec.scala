@@ -34,7 +34,7 @@ class RulesSpec extends SparkSuite {
   }
 
   test("batch rule: file source -> SQL -> memory sink, full lifecycle") {
-    val dir = Files.createTempDirectory("graft_rule_in")
+    val dir = tempDir("graft_rule_in")
     writeJson(dir, Seq(
       """{"device":"d1","temp":50}""",
       """{"device":"d1","temp":70}""",
@@ -61,7 +61,7 @@ class RulesSpec extends SparkSuite {
   }
 
   test("hygiene rule: gopher gate + pii redaction + quality score inside rule SQL") {
-    val dir = Files.createTempDirectory("graft_rule_hyg")
+    val dir = tempDir("graft_rule_hyg")
     val keepText = ("the quick brown fox jumps over the lazy dog while it waits " * 5).trim
     writeJson(dir, Seq(
       s"""{"doc":"good","body":"$keepText mail me at a.b@x.co"}""",
@@ -86,7 +86,7 @@ class RulesSpec extends SparkSuite {
   }
 
   test("sketch rule: hll distinct + topk sketch aggregates inside rule SQL") {
-    val dir = Files.createTempDirectory("graft_rule_sketch")
+    val dir = tempDir("graft_rule_sketch")
     writeJson(dir, (1 to 60).map { i =>
       s"""{"shop":"s${i % 3}","user":"u${i % 7}","spend":${i * 2}}"""
     })
@@ -113,8 +113,8 @@ class RulesSpec extends SparkSuite {
   }
 
   test("streaming rule over file stream delivers to sink incrementally") {
-    val dir = Files.createTempDirectory("graft_stream_in")
-    val ckpt = Files.createTempDirectory("graft_ckpt")
+    val dir = tempDir("graft_stream_in")
+    val ckpt = tempDir("graft_ckpt")
     writeJson(dir, Seq("""{"device":"a","temp":5}""", """{"device":"b","temp":9}"""))
     val eng = newEngine
     eng.createStream(
@@ -148,7 +148,7 @@ class RulesSpec extends SparkSuite {
     eng.createStream(
       """CREATE STREAM msens (device STRING, temp BIGINT) WITH
         | (TYPE="mqtt", DATASOURCE="live/sensor")""".stripMargin)
-    val ckpt = Files.createTempDirectory("graft_mqtt_ck")
+    val ckpt = tempDir("graft_mqtt_ck")
     eng.create(Rule("rmq", "SELECT device, temp FROM msens WHERE temp > 20",
       Seq(ConnectorSink("rest", "hook/hot", Map("dataTemplate" -> """{{device}}:{{temp}}"""))),
       streaming = true, checkpointDir = Some(ckpt.toString)))
@@ -191,9 +191,9 @@ class RulesSpec extends SparkSuite {
   }
 
   test("stream-stream join: two watermarked streams join within a time bound") {
-    val d1 = Files.createTempDirectory("graft_ss_left")
-    val d2 = Files.createTempDirectory("graft_ss_right")
-    val ckpt = Files.createTempDirectory("graft_ss_ck")
+    val d1 = tempDir("graft_ss_left")
+    val d2 = tempDir("graft_ss_right")
+    val ckpt = tempDir("graft_ss_ck")
     writeJson(d1, Seq(
       """{"device":"a","temp":21,"ts":"2024-01-02T03:00:10Z"}""",
       """{"device":"b","temp":30,"ts":"2024-01-02T03:00:20Z"}"""))
@@ -229,7 +229,7 @@ class RulesSpec extends SparkSuite {
   }
 
   test("rule-context functions substitute at plan time: rule_id, rule_start, event_time") {
-    val dir = Files.createTempDirectory("graft_ctx_in")
+    val dir = tempDir("graft_ctx_in")
     writeJson(dir, Seq("""{"device":"a","temp":5,"ts":"2024-01-02T03:04:05Z"}"""))
     val eng = newEngine
     eng.createStream(
@@ -251,7 +251,7 @@ class RulesSpec extends SparkSuite {
   }
 
   test("batch rule evaluates once: a single Spark job serves sink and metrics") {
-    val dir = Files.createTempDirectory("graft_onejob_in")
+    val dir = tempDir("graft_onejob_in")
     writeJson(dir, Seq("""{"x":1}""", """{"x":2}""", """{"x":3}"""))
     val eng = newEngine
     eng.createStream(
@@ -276,8 +276,8 @@ class RulesSpec extends SparkSuite {
   }
 
   test("restart policy relaunches a failed streaming rule from its checkpoint") {
-    val dir = Files.createTempDirectory("graft_restart_in")
-    val ckpt = Files.createTempDirectory("graft_restart_ck")
+    val dir = tempDir("graft_restart_in")
+    val ckpt = tempDir("graft_restart_ck")
     writeJson(dir, Seq("""{"v":1}""", """{"v":2}"""))
     val eng = newEngine
     eng.createStream(
@@ -331,9 +331,9 @@ class RulesSpec extends SparkSuite {
   }
 
   test("file-backed lookup table: later micro-batches see updated rows") {
-    val evDir = Files.createTempDirectory("graft_lkp_ev")
-    val lkDir = Files.createTempDirectory("graft_lkp_dim")
-    val ckpt = Files.createTempDirectory("graft_lkp_ck")
+    val evDir = tempDir("graft_lkp_ev")
+    val lkDir = tempDir("graft_lkp_dim")
+    val ckpt = tempDir("graft_lkp_ck")
     writeJson(evDir, Seq("""{"device":"d1"}"""))
     Files.write(lkDir.resolve("dim-0.json"), """{"device":"d1","site":"berlin"}""".getBytes)
     val eng = newEngine
@@ -363,8 +363,8 @@ class RulesSpec extends SparkSuite {
 
   test("redis lookup table: stream joins enrich from redis; updates land next batch") {
     val stub = graft.net.RedisStubServer.start()
-    val evDir = Files.createTempDirectory("graft_rlk_ev")
-    val ckpt = Files.createTempDirectory("graft_rlk_ck")
+    val evDir = tempDir("graft_rlk_ev")
+    val ckpt = tempDir("graft_rlk_ck")
     try {
       stub.put("d1", """{"site":"berlin","floor":2}""")
       writeJson(evDir, Seq("""{"device":"d1"}"""))
@@ -411,8 +411,8 @@ class RulesSpec extends SparkSuite {
       ex.sendResponseHeaders(200, b.length); ex.getResponseBody.write(b); ex.close()
     })
     server.start()
-    val evDir = Files.createTempDirectory("graft_hlk_ev")
-    val ckpt = Files.createTempDirectory("graft_hlk_ck")
+    val evDir = tempDir("graft_hlk_ev")
+    val ckpt = tempDir("graft_hlk_ck")
     try {
       writeJson(evDir, Seq("""{"device":"d1"}"""))
       val eng = newEngine
@@ -456,8 +456,8 @@ class RulesSpec extends SparkSuite {
       ex.sendResponseHeaders(200, b.length); ex.getResponseBody.write(b); ex.close()
     })
     server.start()
-    val evDir = Files.createTempDirectory("graft_clk_ev")
-    val ckpt = Files.createTempDirectory("graft_clk_ck")
+    val evDir = tempDir("graft_clk_ev")
+    val ckpt = tempDir("graft_clk_ck")
     try {
       writeJson(evDir, Seq("""{"device":"d1"}"""))
       val eng = newEngine
@@ -490,7 +490,7 @@ class RulesSpec extends SparkSuite {
       // the same rule WITHOUT cache re-pulls every micro-batch — the
       // freshness-vs-cost dial the reference's cache prop controls
       pulls.set(0)
-      val ckpt2 = Files.createTempDirectory("graft_clk_ck2")
+      val ckpt2 = tempDir("graft_clk_ck2")
       val eng2 = newEngine
       eng2.createStream(
         s"""CREATE STREAM cev2 (device STRING) WITH
@@ -607,7 +607,7 @@ class RulesSpec extends SparkSuite {
   }
 
   test("eKuiper-dialect rule SQL (TUMBLINGWINDOW, window_start) runs unchanged") {
-    val dir = Files.createTempDirectory("graft_ek")
+    val dir = tempDir("graft_ek")
     writeJson(dir, Seq(
       """{"device":"a","temp":30,"ts":"2024-01-01T00:00:05Z"}""",
       """{"device":"a","temp":35,"ts":"2024-01-01T00:00:55Z"}""",
@@ -686,8 +686,8 @@ class RulesSpec extends SparkSuite {
   }
 
   test("streaming rule recovers from checkpoint without reprocessing") {
-    val dir = Files.createTempDirectory("graft_ckpt_in")
-    val ckpt = Files.createTempDirectory("graft_ckpt_state")
+    val dir = tempDir("graft_ckpt_in")
+    val ckpt = tempDir("graft_ckpt_state")
     writeJson(dir, Seq("""{"device":"a","temp":1}"""))
     ConnectorSink.clear("mqtt", "ckpt/out")
     def mkEngine(): RuleEngine = {
@@ -715,10 +715,10 @@ class RulesSpec extends SparkSuite {
   test("stateful window rule resumes on a checkpoint Spark's default manager wrote") {
     import graft.streaming.LocalCheckpointFileManager
     import LocalCheckpointFileManager.ConfKey
-    val dir = Files.createTempDirectory("graft_resume_in")
-    val ckpt = Files.createTempDirectory("graft_resume_ck")
-    val streamed = Files.createTempDirectory("graft_resume_out")
-    val batched = Files.createTempDirectory("graft_resume_batch")
+    val dir = tempDir("graft_resume_in")
+    val ckpt = tempDir("graft_resume_ck")
+    val streamed = tempDir("graft_resume_out")
+    val batched = tempDir("graft_resume_batch")
     // one event per device every 3 s; the flush event's late timestamp
     // moves the watermark past every data window
     def events(secs: Range): Seq[String] = for (s <- secs; d <- Seq("a", "b")) yield
@@ -774,7 +774,7 @@ class RulesSpec extends SparkSuite {
   }
 
   test("schemaless CREATE STREAM infers the schema from existing files") {
-    val dir = Files.createTempDirectory("graft_schemaless")
+    val dir = tempDir("graft_schemaless")
     writeJson(dir, Seq("""{"device":"a","temp":12}""", """{"device":"b","temp":30}"""))
     val eng = newEngine
     eng.createStream(
@@ -790,7 +790,7 @@ class RulesSpec extends SparkSuite {
   }
 
   test("streaming rule joins a stream with a lookup table") {
-    val dir = Files.createTempDirectory("graft_lookup_in")
+    val dir = tempDir("graft_lookup_in")
     writeJson(dir, Seq("""{"device":"d1","temp":30}""", """{"device":"d2","temp":40}"""))
     val eng = newEngine
     eng.createStream(
@@ -816,9 +816,9 @@ class RulesSpec extends SparkSuite {
   }
 
   test("rule chaining: streaming rule -> memory topic -> streaming rule") {
-    val dir = Files.createTempDirectory("graft_chain_in")
-    val ck1 = Files.createTempDirectory("graft_chain_ck1")
-    val ck2 = Files.createTempDirectory("graft_chain_ck2")
+    val dir = tempDir("graft_chain_in")
+    val ck1 = tempDir("graft_chain_ck1")
+    val ck2 = tempDir("graft_chain_ck2")
     writeJson(dir, Seq("""{"device":"a","temp":30}""", """{"device":"b","temp":15}"""))
     val eng = newEngine
     eng.createStream(

@@ -13,7 +13,7 @@ import java.nio.file.Files
 class SourcesSinksSpec extends SparkSuite {
 
   test("file source reads json / csv / lines / parquet") {
-    val dir = Files.createTempDirectory("graft_fs")
+    val dir = tempDir("graft_fs")
     Files.write(dir.resolve("a.json"), "{\"x\":1,\"y\":\"p\"}\n{\"x\":2,\"y\":\"q\"}".getBytes)
     val js = FileSource(s"$dir/a.json", "json").batch(spark)
     assert(js.count() == 2 && js.agg(sum("x")).first().getLong(0) == 3)
@@ -31,7 +31,7 @@ class SourcesSinksSpec extends SparkSuite {
   }
 
   test("file source streaming picks up files with declared schema") {
-    val dir = Files.createTempDirectory("graft_fstream")
+    val dir = tempDir("graft_fstream")
     Files.write(dir.resolve("a.json"), "{\"x\":1}\n{\"x\":2}".getBytes)
     val src = FileSource(dir.toString, "json", Some(StructType.fromDDL("x bigint")))
     val q = src.stream(spark).writeStream.format("memory")
@@ -46,7 +46,7 @@ class SourcesSinksSpec extends SparkSuite {
   }
 
   test("binary file source: whole-file payloads feed the multimodal path") {
-    val dir = Files.createTempDirectory("graft_bin")
+    val dir = tempDir("graft_bin")
     Files.write(dir.resolve("img1.bin"), Array.tabulate[Byte](300)(_.toByte))
     Files.write(dir.resolve("img2.bin"), Array.tabulate[Byte](64)(i => (i * 3).toByte))
     val df = FileSource(dir.toString, "binary").batch(spark)
@@ -457,12 +457,6 @@ class SourcesSinksSpec extends SparkSuite {
     assert(df.agg(sum("temp")).first().getLong(0) == 46)
     intercept[IllegalArgumentException](ConnectorSource("carrier-pigeon", "x",
       StructType.fromDDL("a int")))
-    // spool frames land atomically: only fully-written frame_*.json
-    // files are ever visible to the tailing stream (no .tmp residue)
-    val spool = new java.io.File(ConnectorFeed.spoolDir("mqtt", "in/topic"))
-    val names = spool.listFiles().map(_.getName).toSeq
-    assert(names.count(_.matches("frame_\\d{12}\\.json")) == 2, names)
-    assert(!names.exists(_.endsWith(".tmp")), names)
   }
 
   test("schemaless connector stream infers its schema from pushed frames") {
@@ -556,7 +550,7 @@ class SourcesSinksSpec extends SparkSuite {
   }
 
   test("reliable sink spools failed batches and redelivers in order") {
-    val dir = Files.createTempDirectory("graft_resend")
+    val dir = tempDir("graft_resend")
     FlakySink.reset(failFirst = 2) // first two writeBatch calls throw
     val rs = ReliableSink(FlakySink(), dir.toString, maxCachedBatches = 10)
     rs.writeBatch(spark.range(0, 3).toDF("v"))   // fails -> spooled
@@ -567,6 +561,18 @@ class SourcesSinksSpec extends SparkSuite {
     assert(rs.pendingBatches == 0)
     assert(FlakySink.delivered.toList == List(0L until 3L, 3L until 6L, 6L until 9L)
       .map(_.toList))
+  }
+
+  test("memory hub drop deletes the topic's spool directory") {
+    MemoryHub.spool("hub_drop", spark.range(3).toDF("v"))
+    val dir = new java.io.File(MemoryHub.spoolDir("hub_drop"))
+    assert(dir.getName.startsWith("graft_hub_hub_drop_"))
+    assert(dir.listFiles().exists(_.getName.endsWith(".parquet")))
+    MemoryHub.drop("hub_drop")
+    assert(!dir.exists())
+    // a topic used again after drop gets a fresh spool
+    assert(MemoryHub.spoolDir("hub_drop") != dir.toString)
+    MemoryHub.drop("hub_drop")
   }
 
   test("memory hub append keeps a bounded plan over 100 appends") {
@@ -584,9 +590,9 @@ class SourcesSinksSpec extends SparkSuite {
   }
 
   test("reliable sink under streaming: failed batch redelivers next trigger, query survives") {
-    val in = Files.createTempDirectory("graft_rel_in")
-    val cache = Files.createTempDirectory("graft_rel_cache")
-    val ckpt = Files.createTempDirectory("graft_rel_ck")
+    val in = tempDir("graft_rel_in")
+    val cache = tempDir("graft_rel_cache")
+    val ckpt = tempDir("graft_rel_ck")
     Files.write(in.resolve("a.json"), """{"v":1}""".getBytes)
     FlakySink.reset(failFirst = 1)
     val rs = ReliableSink(FlakySink(), cache.toString)
@@ -607,7 +613,7 @@ class SourcesSinksSpec extends SparkSuite {
   }
 
   test("file sink writes json/csv/parquet that read back identically") {
-    val out = Files.createTempDirectory("graft_sink")
+    val out = tempDir("graft_sink")
     val df = spark.range(10).toDF("v").withColumn("s", concat(lit("row"), col("v")))
     for (fmt <- Seq("json", "csv", "parquet")) {
       FileSink(s"$out/$fmt", fmt).writeBatch(df)

@@ -10,6 +10,8 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   /** Smallest driver-generated dataset — correctness fixtures. */
   val sf: String = "/root/testdata/sf0.001"
+  /** A fresh temporary directory, deleted when the JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = TempDirs.create(prefix)
 }
 
 object SparkSuite {

@@ -596,7 +596,7 @@ class StreamingSpec extends SparkSuite {
       .select($"user_id", unix_micros($"ts").as("tsm"), $"event_type")
       .orderBy("tsm").collect()
       .map(r => FunnelEvt(r.getLong(0), r.getLong(1), r.getString(2)))
-    val ckpt = java.nio.file.Files.createTempDirectory("funnel_ck").toString
+    val ckpt = tempDir("funnel_ck").toString
     val ms = MemoryStream[FunnelEvt]
     val half = evs.length / 2
     // the memory sink refuses checkpoint recovery — collect hits via

@@ -19,7 +19,7 @@ class TablesSpec extends SparkSuite {
   private def jobs(body: => Unit): Int = JobCounter(spark.sparkContext)(body)._2.jobs
 
   private def withTempDir(body: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-tables").toFile
+    val dir = tempDir("graft-tables").toFile
     try body(dir.getPath) finally FileUtils.deleteDirectory(dir)
   }
 

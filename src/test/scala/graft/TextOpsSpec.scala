@@ -446,7 +446,7 @@ class TextOpsSpec extends SparkSuite {
     import spark.implicits._
     val corpus = Seq("a b a b", "b c a").toDF("text")
     val m = TextOps.fitKnModel(corpus, "text")
-    val dir = java.nio.file.Files.createTempDirectory("kn_m").toString
+    val dir = tempDir("kn_m").toString
     try {
       TextOps.saveKnModel(spark, m, dir)
       val back = TextOps.loadKnModel(spark, dir)

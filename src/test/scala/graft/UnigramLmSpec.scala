@@ -74,7 +74,7 @@ class UnigramLmSpec extends SparkSuite {
   test("vocabulary persistence: save/load round-trips pieces and encoding") {
     val df = Tables(spark, sf, "documents").limit(40)
     val model = UnigramLm.train(df, "text", vocabSize = 300, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("unigram_v").toString
+    val dir = tempDir("unigram_v").toString
     try {
       UnigramLm.save(spark, model, dir)
       val back = UnigramLm.load(spark, dir)

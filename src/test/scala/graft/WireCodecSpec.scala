@@ -197,7 +197,7 @@ class WireCodecSpec extends SparkSuite {
   // ---- file sink rolling ----
 
   test("file sink rollingCount caps rows per part file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-roll-count").toFile
+    val dir = tempDir("graft-roll-count").toFile
     val out = s"${dir.getAbsolutePath}/data"
     FileSink(out, "json", Map("rollingCount" -> "25"))
       .writeBatch(spark.range(100).repartition(1).toDF())
@@ -225,7 +225,7 @@ class WireCodecSpec extends SparkSuite {
 
   test("file sink rollingSize re-estimates the row cap as rows widen") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-roll-size").toFile
+    val dir = tempDir("graft-roll-size").toFile
     val out = s"${dir.getAbsolutePath}/size"
     val old = FileSink.RollResampleEvery
     FileSink.RollResampleEvery = 2 // test cadence: re-sample every 2nd batch
@@ -247,7 +247,7 @@ class WireCodecSpec extends SparkSuite {
   }
 
   test("file sink compression prop reaches the writer (gzip json reads back)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-roll-gz").toFile
+    val dir = tempDir("graft-roll-gz").toFile
     val out = s"${dir.getAbsolutePath}/gz"
     import spark.implicits._
     FileSink(out, "json", Map("compression" -> "gzip"))
