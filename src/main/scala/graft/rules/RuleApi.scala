@@ -967,7 +967,7 @@ object RuleApi {
     // last micro-batch (a batch without data has no addBatch or commits)
     val phases = engine.list.map(id => id -> engine.lastBatchPhases(id))
     sb.append("# HELP graft_rule_batch_phase_ms Phase time of the rule's last micro-batch, " +
-      "from StreamingQueryProgress.durationMs (slowest of the rule's queries)\n")
+      "from StreamingQueryProgress.durationMs (slowest of the rule's queries, one per output frame)\n")
     sb.append("# TYPE graft_rule_batch_phase_ms gauge\n")
     for ((id, ms) <- phases; phase <- BatchPhases; v <- ms.get(phase))
       sb.append(s"""graft_rule_batch_phase_ms{rule="${esc(id)}",phase="$phase"} $v\n""")

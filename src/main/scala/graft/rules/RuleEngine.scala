@@ -5,14 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** A rule: one SQL query over catalog streams/tables plus sink
-  * actions — the reference's core object (`internal/topo/rule`,
-  * rule JSON {"sql": ..., "actions": [...]}).
-  *
-  * `streaming = false` runs the rule once over the bounded sources
-  * (eKuiper's scan-table/batch rule); `true` compiles the same SQL
-  * onto readStream sources and runs continuously.
-  */
 /** Restart-on-failure policy (reference: rule option restartStrategy —
   * attempts/delay/multiplier/maxDelay, etc/kuiper.yaml): a streaming
   * rule whose query dies with an exception is relaunched from its
@@ -30,6 +22,14 @@ final case class ScheduleRange(beginMs: Long, endMs: Long) {
   require(beginMs < endMs, "schedule window must have beginMs < endMs")
 }
 
+/** A rule: one SQL query over catalog streams/tables plus sink
+  * actions — the reference's core object (`internal/topo/rule`,
+  * rule JSON {"sql": ..., "actions": [...]}).
+  *
+  * `streaming = false` runs the rule once over the bounded sources
+  * (eKuiper's scan-table/batch rule); `true` compiles the same SQL
+  * onto readStream sources and runs continuously.
+  */
 final case class Rule(id: String, sql: String, sinks: Seq[Sink],
                       streaming: Boolean = false,
                       triggerMs: Long = 0,
@@ -182,19 +182,19 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
     val t = new Thread(r, "graft-rule-scheduler"); t.setDaemon(true); t
   })
 
-  def create(rule: Rule): Unit =
+  def create(rule: Rule): Unit = {
+    if (rule.streaming) Sink.outputMode(rule.sinks) // graph rules' sinks: checked at start
     if (slots.putIfAbsent(rule.id, new Slot(rule)) != null)
       throw new IllegalStateException(s"rule ${rule.id} already exists")
+  }
 
   def createStream(ddl: String): StreamDef = catalog.executeDdl(ddl)
 
-  private def referencedNames(sql: String): Seq[String] =
-    catalog.list.filter(n =>
-      java.util.regex.Pattern.compile(s"(?i)\\b$n\\b").matcher(sql).find())
-
   /** Rule definition + referenced stream names (REST /rules/{id}/topo). */
   private[rules] def ruleDef(id: String): Rule = lookup(id).rule
-  private[rules] def referencedStreams(sql: String): Seq[String] = referencedNames(sql)
+  private[rules] def referencedStreams(sql: String): Seq[String] =
+    catalog.list.filter(n =>
+      java.util.regex.Pattern.compile(s"(?i)\\b$n\\b").matcher(sql).find())
   private[rules] def setTags(id: String, tags: Seq[String]): Unit = {
     val slot = lookup(id)
     slot.rule = slot.rule.copy(tags = tags)
@@ -236,9 +236,6 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
     } else substituted
   }
 
-  /** Resolve every catalog stream referenced by the rule's SQL as a
-    * temp view (stream mode per the rule), then parse the SQL.
-    */
   /** Batch-compile a bare SQL string against the catalog — the rule
     * trial-run path (RuleApi /ruletest); same planning as a batch rule,
     * nothing registered or started.
@@ -247,68 +244,63 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
                                 overrides: Map[String, DataFrame] = Map.empty): DataFrame =
     plan(Rule("__trial__", sql, Seq.empty), overrides)
 
+  /** Resolve every catalog stream referenced by the rule's SQL as a
+    * temp view (stream mode per the rule), then parse the SQL.
+    */
   private def plan(rule: Rule,
                    overrides: Map[String, DataFrame] = Map.empty): DataFrame = {
-    val referenced = referencedNames(rule.sql)
+    val referenced = referencedStreams(rule.sql)
     referenced.foreach { name =>
       overrides.get(name) match {
         // trial mockSource: the stream must exist in the catalog (it
         // names the schema); its DATA is replaced for this plan only
         case Some(mock) => mock.createOrReplaceTempView(name)
-        case None =>
-          val d = catalog.get(name).get
-          val base =
-            if (rule.streaming && !d.isTable) d.source.stream(spark)
-            else d.source.batch(spark)
-          val withWm = (d.timestampCol, d.watermark) match {
-            case (Some(ts), Some(wm)) if rule.streaming => base.withWatermark(ts, wm)
-            case _ => base
-          }
-          withWm.createOrReplaceTempView(name)
+        case None => read(catalog.get(name).get, rule.streaming).createOrReplaceTempView(name)
       }
     }
     // accept the reference's own SQL dialect (TUMBLINGWINDOW(ss,10) …)
     spark.sql(sparkSql(rule, referenced))
   }
 
-  /** Live-lookup execution (reference: lookup sources,
+  /** A catalog stream as a rule reads it: a streaming rule's streams as
+    * a readStream, all else bounded; watermarked in a streaming rule.
+    */
+  private def read(d: StreamDef, streaming: Boolean): DataFrame = {
+    val base = if (streaming && !d.isTable) d.source.stream(spark) else d.source.batch(spark)
+    (d.timestampCol, d.watermark) match {
+      case (Some(ts), Some(wm)) if streaming => base.withWatermark(ts, wm)
+      case _ => base
+    }
+  }
+
+  /** Live-lookup output (reference: lookup sources,
     * internal/io/memory/lookupsource.go — external tables queried per
-    * batch, not snapshotted at rule start): the stream side runs as a
-    * normal readStream, but the SQL is re-planned INSIDE foreachBatch
-    * with every referenced table re-resolved fresh, so dimension
-    * changes land in the very next micro-batch. A snapshot join (the
-    * default) analyzes the table's file listing once at rule start.
+    * batch, not snapshotted at rule start): the frame is the stream,
+    * and per micro-batch, once for all sinks, the SQL is re-planned with
+    * every referenced table re-resolved fresh, so dimension changes land
+    * in the very next micro-batch. A snapshot join (the default)
+    * analyzes the table's file listing once at rule start.
     *
     * Only stateless SQL belongs here: each batch is planned in batch
     * mode, so cross-batch streaming state (windows, dedup) would reset
     * — exactly the reference's contract, where lookup joins are
     * per-event enrichments.
     */
-  private def launchLiveLookup(slot: Slot, rule: Rule): Seq[StreamingQuery] = {
-    val referenced = referencedNames(rule.sql)
+  private def liveLookupOutput(rule: Rule): (Seq[(DataFrame, Seq[Sink])], DataFrame => DataFrame) = {
+    val referenced = referencedStreams(rule.sql)
     val (tables, streams) = referenced.partition(n => catalog.get(n).exists(_.isTable))
     require(streams.size == 1,
       s"liveLookup rules need exactly one stream source, found: $streams")
     val sname = streams.head
-    val sdef = catalog.get(sname).get
-    val base = sdef.source.stream(spark)
-    val withWm = (sdef.timestampCol, sdef.watermark) match {
-      case (Some(ts), Some(wm)) => base.withWatermark(ts, wm)
-      case _ => base
-    }
     val sql = sparkSql(rule, referenced)
-    rule.sinks.zipWithIndex.map { case (sink, i) =>
-      Sink.startQuery(withWm, ownedQueryName(rule.id, s"${rule.id}_$i"), rule.triggerMs,
-          rule.checkpointDir.map(c => s"$c/$i"))(
-        _.foreachBatch { (b: DataFrame, _: Long) =>
-          // micro-batches run in a cloned session — register and plan
-          // there, not in the outer session's catalog
-          val sess = b.sparkSession
-          b.createOrReplaceTempView(sname)
-          tables.foreach(t =>
-            catalog.get(t).get.source.batch(sess).createOrReplaceTempView(t))
-          sink.deliver(sess.sql(sql))
-        })
+    Seq(read(catalog.get(sname).get, streaming = true) -> rule.sinks) -> { (b: DataFrame) =>
+      // micro-batches run in a cloned session — register and plan
+      // there, not in the outer session's catalog
+      val sess = b.sparkSession
+      b.createOrReplaceTempView(sname)
+      tables.foreach(t =>
+        catalog.get(t).get.source.batch(sess).createOrReplaceTempView(t))
+      sess.sql(sql)
     }
   }
 
@@ -366,35 +358,38 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
     }
   }
 
-  private def planOutputs(rule: Rule): Seq[(DataFrame, Sink)] = rule.graphJson match {
+  /** The rule's output frames with their sinks: one for a SQL rule; for
+    * a graph rule one per distinct frame (`eq`) its sink nodes read.
+    */
+  private def planOutputs(rule: Rule): Seq[(DataFrame, Seq[Sink])] = rule.graphJson match {
     case Some(json) =>
-      GraphRule.compile(spark, catalog, json, rule.streaming).map(c => c.df -> c.sink)
-    case None =>
-      val df = plan(rule)
-      rule.sinks.map(df -> _)
+      val compiled = GraphRule.compile(spark, catalog, json, rule.streaming)
+      compiled.foldLeft(Vector.empty[DataFrame])((fs, c) => if (fs.exists(_ eq c.df)) fs else fs :+ c.df)
+        .map(f => f -> compiled.filter(_.df eq f).map(_.sink))
+    case None => Seq(plan(rule) -> rule.sinks)
   }
 
-  /** One streaming query per output: `<id>_<tag><i>`, checkpoint `<ckpt>/<i>`. */
-  private def startStreams(rule: Rule, outputs: Seq[(DataFrame, Sink)],
-                           tag: String): Seq[StreamingQuery] =
-    outputs.zipWithIndex.map { case ((df, sink), i) =>
-      sink.writeStream(df, ownedQueryName(rule.id, s"${rule.id}_$tag$i"),
-        rule.triggerMs, rule.checkpointDir.map(c => s"$c/$i"))
-    }
+  /** One query per output frame, `<id>_<tag><i>` with checkpoint `<ckpt>/<i>`,
+    * fanned out to its sinks: a row is read, counted by `status` and
+    * checkpointed once per frame. All frames' sinks are checked first.
+    */
+  private def startStreams(rule: Rule, tag: String): Seq[StreamingQuery] = {
+    val (outputs, perBatch) =
+      if (rule.liveLookup) liveLookupOutput(rule) else (planOutputs(rule), identity[DataFrame] _)
+    outputs.collect { case (df, sinks) if sinks.nonEmpty => df -> Sink.fanOut(sinks, perBatch) }
+      .zipWithIndex.map { case ((df, wire), i) =>
+        Sink.startQuery(df, ownedQueryName(rule.id, s"${rule.id}_$tag$i"), rule.triggerMs,
+          rule.checkpointDir.map(c => s"$c/$i"))(wire)
+      }
+  }
 
   private def launch(slot: Slot, rule: Rule): Unit = {
     try {
-      if (rule.streaming && rule.liveLookup) {
-        slot.queries = launchLiveLookup(slot, rule)
-        if (rule.restart.attempts > 0) monitor(slot, rule)
-        slot.state = RuleState.Running
-        return
-      }
-      val outputs: Seq[(DataFrame, Sink)] = planOutputs(rule)
       if (rule.streaming) {
-        slot.queries = startStreams(rule, outputs, "")
+        slot.queries = startStreams(rule, "")
         if (rule.restart.attempts > 0) monitor(slot, rule)
       } else {
+        val outputs = planOutputs(rule).flatMap { case (df, sinks) => sinks.map(df -> _) }
         // piggyback the row counter on the sink's own action via
         // observe(): the old df.count() re-ran the whole plan a second
         // time just for the metric. Only a sink whose action pulls all
@@ -439,8 +434,7 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
             }
         }
       }
-      slot.state = RuleState.Running
-      if (!rule.streaming) slot.state = RuleState.Stopped // one-shot done
+      slot.state = if (rule.streaming) RuleState.Running else RuleState.Stopped // batch: one-shot
     } catch {
       case e: Exception =>
         slot.state = RuleState.Failed(String.valueOf(e.getMessage))
@@ -475,9 +469,7 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
               rule.restart.maxDelayMs)
             if (slot.epoch.get == ep)
               try {
-                slot.queries =
-                  if (rule.liveLookup) launchLiveLookup(slot, rule)
-                  else startStreams(rule, planOutputs(rule), s"r${attempt}_")
+                slot.queries = startStreams(rule, s"r${attempt}_")
                 slot.state = RuleState.Running
               } catch { case e: Exception =>
                 slot.state = RuleState.Failed(String.valueOf(e.getMessage)); done = true
@@ -523,7 +515,7 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
 
   /** Phase times (`StreamingQueryProgress.durationMs`) of the rule's
     * last micro-batch, per phase the slowest of its queries (one per
-    * sink); empty for a batch rule and before the first micro-batch.
+    * output frame); empty for a batch rule and before the first batch.
     */
   private[rules] def lastBatchPhases(id: String): Map[String, Long] = {
     import scala.jdk.CollectionConverters._
@@ -536,12 +528,8 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
     * compiles to (formatted mode shows codegen spans + pushed filters).
     */
   def explain(id: String): String = {
-    val rule = lookup(id).rule
     // explain on the batch form (streaming plans resolve per batch)
-    val df = rule.graphJson match {
-      case Some(json) => GraphRule.compile(spark, catalog, json, streaming = false).head.df
-      case None => plan(rule.copy(streaming = false))
-    }
+    val df = planOutputs(lookup(id).rule.copy(streaming = false)).head._1
     df.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode)
   }
 
@@ -550,7 +538,7 @@ final class RuleEngine(spark: SparkSession, val catalog: Catalog = new Catalog) 
     slots.keySet().asScala.toSeq.sorted
   }
 
-  /** Block until all streaming sinks of a rule are idle (test helper —
+  /** Block until all streaming queries of a rule are idle (test helper —
     * mirrors processAllAvailable).
     */
   def processAllAvailable(id: String): Unit =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 /** Sink abstraction (SURVEY §2.7). Mirrors the reference's sink
   * contract (docs/en_US/guide/sinks): every sink receives each result
   * batch, optionally reshaped by a data template and batched. Batch
-  * rules call writeBatch once; streaming rules run writeStream.
+  * rules call deliver once; streaming rules go through [[Sink.fanOut]].
   *
   * Common features implemented once in `Sink`:
   *  - dataTemplate: `{{field}}` substitution producing one formatted
@@ -75,14 +75,10 @@ trait Sink {
     if (options.getOrElse("omitIfEmpty", "false").toBoolean && df.isEmpty) ()
     else writeBatch(df)
 
-  /** Continuous delivery for a streaming rule: foreachBatch keeps the
-    * per-sink logic identical in both modes.
-    */
+  /** Continuous delivery to this sink alone, through [[Sink.fanOut]]. */
   def writeStream(df: DataFrame, queryName: String,
                   triggerMs: Long = 0, checkpoint: Option[String] = None): StreamingQuery =
-    Sink.startQuery(df, queryName, triggerMs, checkpoint)(
-      _.outputMode(options.getOrElse("outputMode", "append"))
-        .foreachBatch((b: DataFrame, _: Long) => deliver(b)))
+    Sink.startQuery(df, queryName, triggerMs, checkpoint)(Sink.fanOut(Seq(this)))
 }
 
 object Sink {
@@ -98,6 +94,29 @@ object Sink {
     val w = wire(df.writeStream.queryName(queryName))
     val timed = if (triggerMs > 0) w.trigger(Trigger.ProcessingTime(triggerMs)) else w
     checkpoint.fold(timed)(c => timed.option("checkpointLocation", c)).start()
+  }
+
+  /** The `outputMode` option `sinks` share (default append). */
+  def outputMode(sinks: Seq[Sink]): String = {
+    val modes = sinks.map(_.options.getOrElse("outputMode", "append")).distinct
+    require(modes.size <= 1, s"sinks on one output frame disagree on outputMode: ${modes.mkString(", ")}")
+    modes.headOption.getOrElse("append")
+  }
+
+  /** Wire one query to all `sinks` of its frame in their [[outputMode]]
+    * (checked now): each micro-batch goes through `perBatch` to every
+    * sink's `deliver`, persisted while several sinks read it. At-least-
+    * once per sink, as `foreachBatch` is: a sink that throws fails the
+    * query before the batch commits; a restart replays it to every sink.
+    */
+  def fanOut(sinks: Seq[Sink], perBatch: DataFrame => DataFrame = identity)
+      : DataStreamWriter[Row] => DataStreamWriter[Row] = {
+    val mode = outputMode(sinks)
+    _.outputMode(mode).foreachBatch { (b: DataFrame, _: Long) =>
+      val out = perBatch(b)
+      if (sinks.size == 1) sinks.head.deliver(out)
+      else { out.persist(); try sinks.foreach(_.deliver(out)) finally out.unpersist() }
+    }
   }
 
   /** Split "a {{b}} c" into Left(literal) / Right(fieldName) parts. */
@@ -320,13 +339,6 @@ final case class ReliableSink(inner: Sink, cacheDir: String,
       f"$cacheDir/batch_${System.currentTimeMillis()}%014d_${seq.incrementAndGet()}%012d")
   }
 
-  private def delete(dir: java.io.File): Unit = {
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { f =>
-      if (f.isDirectory) delete(f) else f.delete()
-    }
-    dir.delete()
-  }
-
   /** Redeliver spooled batches, oldest first; stops at the first
     * failure to preserve order. Returns true when the queue drained.
     */
@@ -334,7 +346,7 @@ final case class ReliableSink(inner: Sink, cacheDir: String,
     pendingDirs().forall { dir =>
       try {
         inner.writeBatch(spark.read.parquet(dir.getAbsolutePath))
-        delete(dir); true
+        org.apache.commons.io.FileUtils.deleteQuietly(dir); true
       } catch { case _: Exception => false }
     }
 

@@ -277,16 +277,21 @@ class GraphRuleSpec extends SparkSuite {
     eng.createStream(
       s"""CREATE STREAM gs (device STRING, temp BIGINT) WITH
          | (TYPE="file", FORMAT="json", DATASOURCE="$dir")""".stripMargin)
-    MemoryHub.drop("gs_out")
-    eng.create(Rule.graph("gstream",
-      """{"nodes": {
+    MemoryHub.drop("gs_out"); MemoryHub.drop("gs_out2")
+    def graph(mode1: String, mode2: String): String =
+      s"""{"nodes": {
         |  "s": {"type":"source", "stream":"gs"},
         |  "f": {"type":"operator", "op":"filter", "expr":"temp > 20"},
-        |  "o": {"type":"sink", "kind":"memory", "endpoint":"gs_out"}},
-        | "edges": {"s":["f"], "f":["o"]}}""".stripMargin,
+        |  "o": {"type":"sink", "kind":"memory", "endpoint":"gs_out", "outputMode":"$mode1"},
+        |  "o2": {"type":"sink", "kind":"memory", "endpoint":"gs_out2", "outputMode":"$mode2"}},
+        | "edges": {"s":["f"], "f":["o", "o2"]}}""".stripMargin
+    eng.create(Rule.graph("gstream", graph("append", "append"),
       streaming = true, checkpointDir = Some(ckpt.toString)))
     eng.start("gstream")
     try {
+      // two sinks on one node read one frame: one query feeds both
+      assert(spark.streams.active.map(_.name).filter(_.startsWith("gstream")).toSeq ==
+        Seq("gstream_0"))
       eng.processAllAvailable("gstream")
       assert(MemoryHub.frame(spark, "gs_out").count() == 1)
       Files.write(dir.resolve("b.json"),
@@ -294,7 +299,15 @@ class GraphRuleSpec extends SparkSuite {
           |{"device":"c","temp":5}""".stripMargin.getBytes)
       eng.processAllAvailable("gstream")
       assert(MemoryHub.frame(spark, "gs_out").count() == 2) // temp 5 filtered
+      assert(MemoryHub.frame(spark, "gs_out2").collect().toSet ==
+        MemoryHub.frame(spark, "gs_out").collect().toSet)
     } finally eng.stop("gstream")
+    // sinks on one frame that disagree on the output mode fail the start
+    eng.create(Rule.graph("gmixed", graph("append", "update"), streaming = true))
+    val err = intercept[IllegalArgumentException](eng.start("gmixed"))
+    assert(err.getMessage.contains("append") && err.getMessage.contains("update"), err.getMessage)
+    assert(eng.status("gmixed").state.isInstanceOf[RuleState.Failed])
+    assert(!spark.streams.active.exists(_.name.startsWith("gmixed")))
   }
 
   test("switch node routes rows to branches; stopAtFirstMatch makes them disjoint") {
@@ -336,6 +349,25 @@ class GraphRuleSpec extends SparkSuite {
     eng.start("gsw2")
     assert(MemoryHub.frame(spark, "sw_all1").count() == 2)
     assert(MemoryHub.frame(spark, "sw_all2").count() == 4)
+    // streaming: each branch is its own frame, so its own query
+    MemoryHub.drop("sws_hot"); MemoryHub.drop("sws_rest")
+    eng.create(Rule.graph("gsw_stream",
+      """{"nodes": {
+        |  "src": {"type":"source", "stream":"swsensor"},
+        |  "sw":  {"type":"operator", "op":"switch", "cases":["temp > 20", "temp > 0"]},
+        |  "hot": {"type":"sink", "kind":"memory", "endpoint":"sws_hot"},
+        |  "rest":{"type":"sink", "kind":"memory", "endpoint":"sws_rest"}},
+        | "edges": {"src":["sw"], "sw":["hot","rest"]}}""".stripMargin,
+      streaming = true, checkpointDir = Some(tempDir("graft_switch_ck").toString)))
+    eng.start("gsw_stream")
+    try {
+      assert(spark.streams.active.map(_.name).filter(_.startsWith("gsw_stream")).sorted.toSeq ==
+        Seq("gsw_stream_0", "gsw_stream_1"))
+      eng.processAllAvailable("gsw_stream")
+      def devices(topic: String) =
+        MemoryHub.frame(spark, topic).select("device").collect().map(_.getString(0)).sorted.toSeq
+      assert(devices("sws_hot") == Seq("d1", "d3") && devices("sws_rest") == Seq("d2", "d4"))
+    } finally eng.stop("gsw_stream")
   }
 
   test("malformed graphs fail loudly") {

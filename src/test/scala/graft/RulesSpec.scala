@@ -343,13 +343,16 @@ class RulesSpec extends SparkSuite {
     eng.createStream(
       s"""CREATE TABLE ldim (device STRING, site STRING) WITH
          | (TYPE="file", FORMAT="json", DATASOURCE="${lkDir.toString}")""".stripMargin)
-    ConnectorSink.clear("rest", "lkp/out")
+    ConnectorSink.clear("rest", "lkp/out"); ConnectorSink.clear("rest", "lkp/out2")
+    val tpl = Map("dataTemplate" -> """{{device}}@{{site}}""")
     eng.create(Rule("rlk",
       "SELECT e.device, d.site FROM lev e JOIN ldim d ON e.device = d.device",
-      Seq(ConnectorSink("rest", "lkp/out", Map("dataTemplate" -> """{{device}}@{{site}}"""))),
+      Seq(ConnectorSink("rest", "lkp/out", tpl), ConnectorSink("rest", "lkp/out2", tpl)),
       streaming = true, checkpointDir = Some(ckpt.toString), liveLookup = true))
     eng.start("rlk")
     try {
+      // both sinks hang off one query, which joins once per micro-batch
+      assert(spark.streams.active.map(_.name).filter(_.startsWith("rlk_")).toSeq == Seq("rlk_0"))
       eng.processAllAvailable("rlk")
       assert(ConnectorSink.sent("rest", "lkp/out").toSet == Set("d1@berlin"))
       // the dimension data changes on disk; the batch side of the join
@@ -358,6 +361,7 @@ class RulesSpec extends SparkSuite {
       Files.write(evDir.resolve("ev-1.json"), """{"device":"d2"}""".getBytes)
       eng.processAllAvailable("rlk")
       assert(ConnectorSink.sent("rest", "lkp/out").toSet == Set("d1@berlin", "d2@tokyo"))
+      assert(ConnectorSink.sent("rest", "lkp/out2") == ConnectorSink.sent("rest", "lkp/out"))
     } finally eng.stop("rlk")
   }
 
@@ -710,6 +714,61 @@ class RulesSpec extends SparkSuite {
     e2.start("ck1"); e2.processAllAvailable("ck1"); e2.stop("ck1")
     assert(ConnectorSink.sent("mqtt", "ckpt/out") == Vector("a1", "b2"),
       "checkpoint restart must deliver exactly the unseen rows")
+  }
+
+  test("two-sink streaming rule runs one query: same rows, rows counted once, one checkpoint") {
+    val eng = newEngine
+    ConnectorFeed.clear("mqtt", "fan/in")
+    MemoryHub.drop("fan_a"); MemoryHub.drop("fan_b")
+    eng.createStream(
+      """CREATE STREAM fan (device STRING, temp BIGINT, ts TIMESTAMP) WITH
+        | (TYPE="mqtt", DATASOURCE="fan/in", TIMESTAMP="ts", WATERMARK="10 seconds")""".stripMargin)
+    val sql = """SELECT device, count(*) AS n, window_start() AS ws
+                |FROM fan GROUP BY device, TUMBLINGWINDOW(ss, 10)""".stripMargin
+    // sinks on one frame share one query, so they must agree on its output mode
+    val mixed = intercept[IllegalArgumentException](eng.create(Rule("fan_mixed", sql,
+      Seq(MemorySink("fan_a", Map("outputMode" -> "append")),
+        MemorySink("fan_b", Map("outputMode" -> "update"))), streaming = true)))
+    assert(mixed.getMessage.contains("append") && mixed.getMessage.contains("update"),
+      mixed.getMessage)
+    val ckpt = tempDir("graft_fan_ck")
+    eng.create(Rule("fan2", sql, Seq(MemorySink("fan_a"), MemorySink("fan_b")),
+      streaming = true, checkpointDir = Some(ckpt.toString)))
+    def push(events: (String, Int)*): Unit = events.foreach { case (device, sec) =>
+      ConnectorFeed.push("mqtt", "fan/in",
+        f"""{"device":"$device","temp":1,"ts":"2024-01-01T00:00:$sec%02dZ"}""", 1000L)
+    }
+    def sunk(topic: String): Seq[(String, Long, Int)] =
+      MemoryHub.frame(spark, topic).selectExpr("device", "n", "second(ws)").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    def queries = spark.streams.active.map(_.name).filter(_.startsWith("fan2")).toSeq
+    eng.start("fan2")
+    try {
+      assert(queries == Seq("fan2_0"))
+      // the watermark reaches 0:15: the 0:00 window closes
+      push("a" -> 1, "a" -> 5, "b" -> 12, "a" -> 25)
+      eng.processAllAvailable("fan2")
+      assert(sunk("fan_a") == Seq(("a", 2L, 0)))
+      assert(sunk("fan_b") == sunk("fan_a"))
+    } finally eng.stop("fan2")
+    // pushed while stopped, so the restarted query reads all three in
+    // its first micro-batch; below the event-time high mark they leave
+    // the watermark in place, so no empty batch follows
+    push("b" -> 16, "a" -> 22, "b" -> 24)
+    eng.start("fan2")
+    try {
+      assert(queries == Seq("fan2_0"))
+      eng.processAllAvailable("fan2")
+      assert(eng.status("fan2").rowsProcessed == 3) // once, however many sinks
+      assert(sunk("fan_a") == Seq(("a", 2L, 0)) && sunk("fan_b") == sunk("fan_a"))
+      // the one checkpoint's state holds the open windows: they close
+      // now, in both sinks, and nothing delivered before is replayed
+      push("c" -> 45)
+      eng.processAllAvailable("fan2")
+      val expected = Seq(("a", 2L, 0), ("a", 2L, 20), ("b", 1L, 20), ("b", 2L, 10)).sorted
+      assert(sunk("fan_a") == expected)
+      assert(sunk("fan_b") == expected)
+    } finally eng.stop("fan2")
   }
 
   test("stateful window rule resumes on a checkpoint Spark's default manager wrote") {
