@@ -2,12 +2,14 @@
 """Local pre-validation of SparkEntry oracles, mimicking the driver:
 run Verify.scala output (parquet per query) against DuckDB running
 oracle_sql.json on the same sf tables; compare value-exact after
-sorting columns by name and rows by value.
+sorting columns by name and rows by value. Approximate queries with
+no exact oracle are checked against exact DuckDB truth within the
+bound their sketch guarantees (TRUTH).
 
 Usage: python3 tools/check.py <sfdir> <verify_outdir>
 """
 import sys, os, json, math
-import duckdb
+
 
 TABLES = ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]
@@ -25,7 +27,61 @@ def canon(cols, rows):
     out = sorted(tuple(norm(r[i]) for i in order) for r in rows)
     return [cols[i] for i in order], out
 
+# HLL at p=14 (m = 2^14 registers) has standard error 1.04/sqrt(m);
+# allow three of them
+HLL_REL_ERR = 3 * 1.04 / math.sqrt(2 ** 14)
+# quantile sketches at accuracy/compression 100: rank error <= 1/100
+RANK_ERR = 0.01
+
+
+def truth_hll(con, sfdir, qdir):
+    """Worst relative error of est_users vs exact count(DISTINCT)."""
+    rows = con.execute(f"""
+        SELECT g.event_type, g.est_users, t.n
+        FROM '{qdir}/*.parquet' g
+        FULL JOIN (SELECT event_type, count(DISTINCT user_id) AS n
+                   FROM '{sfdir}/events.parquet' GROUP BY 1) t
+          USING (event_type)""").fetchall()
+    if any(est is None or n is None for _, est, n in rows):
+        return math.inf, f"group sets differ: {rows}"
+    errs = [(abs(est - n) / n, k, est, n) for k, est, n in rows]
+    err, k, est, n = max(errs)
+    return err, f"{k}: est {est} vs exact {n}"
+
+
+def truth_quantiles(con, sfdir, qdir):
+    """Worst rank error of p50/p90/p99: the distance from q to the rank
+    interval [#(x < v), #(x <= v)] / n of each estimate v in its
+    source's exact n_chars."""
+    est = con.execute(f"SELECT source, p50, p90, p99 FROM '{qdir}/*.parquet'").fetchall()
+    vals = {}
+    for src, x in con.execute(f"SELECT source, n_chars FROM '{sfdir}/documents.parquet'").fetchall():
+        vals.setdefault(src, []).append(x)
+    if {r[0] for r in est} != set(vals):
+        return math.inf, "group sets differ"
+    worst = (0.0, "")
+    for src, *ps in est:
+        xs, n = vals[src], len(vals[src])
+        for q, v in zip((0.5, 0.9, 0.99), ps):
+            lo = sum(x < v for x in xs) / n
+            hi = sum(x <= v for x in xs) / n
+            worst = max(worst, (max(0.0, lo - q, q - hi), f"{src} q={q}: {v}"))
+    return worst
+
+
+# query -> (bound text, bound, check returning (error, worst case))
+TRUTH = {
+    "q_distinct_hll": (
+        "rel. error <= 3 * 1.04/sqrt(2^14) = 2.44% vs count(DISTINCT user_id)",
+        HLL_REL_ERR, truth_hll),
+    "q_quantiles_tdigest": (
+        "rank error <= 0.01 vs the group's sorted n_chars",
+        RANK_ERR, truth_quantiles),
+}
+
+
 def main(sfdir, outdir):
+    import duckdb
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
@@ -42,6 +98,15 @@ def main(sfdir, outdir):
         grows = got.fetchall()
         if name not in oracles:
             print(f"[rows-only] {name}: {len(grows)} rows")
+            if name in TRUTH:
+                text, bound, fn = TRUTH[name]
+                err, worst = fn(con, sfdir, qdir)
+                if err <= bound:
+                    n_ok += 1
+                    print(f"[truth-ok ] {name}: worst {err:.4f} ({worst}); {text}")
+                else:
+                    n_bad += 1
+                    print(f"[FAIL-trth] {name}: worst {err:.4f} ({worst}); {text}")
             continue
         try:
             exp = con.execute(oracles[name])

@@ -21,6 +21,9 @@ import os
 import re
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from check import TRUTH  # noqa: E402  (truth bounds of rows-only queries)
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 QDIR = os.path.join(REPO, "src/main/scala/graft/queries")
 
@@ -133,6 +136,8 @@ def main():
     for name, op, loc in sorted(rows):
         if name in golden:
             kind, n_golden = "golden (2 SF)", n_golden + 1
+            if name in TRUTH:
+                kind += f"; truth: {TRUTH[name][0]}"
         elif name in all_oracle:
             kind, n_oracle = "DuckDB oracle", n_oracle + 1
         else:
