@@ -65,7 +65,7 @@ object Goldens {
       "q_text_unigram" -> "621f273fecb785ee866d9ce36fe2ec705a32013424a2b91649ab74e2e70953cc"),
     "sf0.01" -> Map(
       "q_curation_e2e" -> "35bdaeadabf66f60cfe9b4130475d56d15fb5a64a0332085cbb80fcda6efdfe9",
-      "q_distinct_hll" -> "a9baf50ace10a8efce5086149293408f75f694ce9de3ddc9cfe7dcae31193f6b",
+      "q_distinct_hll" -> "7dbd3541c7fdfc5a1da0ff0977b3ea340e23a6bad4884f5be0725b33a0be2ce7",
       "q_embed_pca" -> "65388c42dc9fb6b6e52df3bad283dd716b3a6c810d984cc9e2fb99462dbd4afd",
       "q_quality_classifier" -> "abb46a5f693cf7cb695b183e2d9285949f985fa569b80f0a99abc8f1452a3ca6",
       "q_fn_geohash" -> "89157d7f5fc46fb4de3662aa1973c0893ef062ad32cd4cb1e023ba895a1974ff",

@@ -333,14 +333,16 @@ object GraftFunctions {
     })
   }
 
-  /** The mergeable-sketch aggregates as rule-SQL names. Builders
-    * return the bare AggregateFunction — the analyzer wraps it in an
-    * AggregateExpression like any native aggregate. Shape parameters
-    * must be literals (they size executor state, so a per-row value
-    * would be meaningless).
+  /** The sketch aggregates as rule-SQL names, each one builder over a
+    * Spark built-in (the analyzer resolves the aggregate inside it).
+    * Shape parameters must be literals: they size executor state, so
+    * a per-row value would be meaningless.
+    *  - `hll_distinct(x[, p])`: `hll_sketch_estimate(hll_sketch_agg(x, p))`,
+    *    p = 14 by default. NULLs are not counted; p outside [4, 21]
+    *    fails with HLL_INVALID_LG_K.
     */
   private def registerSketches(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.NumericType
     // SQL numeric literals arrive as int/bigint/decimal/double
     // depending on how they're written — accept any NumericType
@@ -351,9 +353,11 @@ object GraftFunctions {
         s"$what must be a numeric literal, got $other")
     }
     def litInt(e: Expression, what: String): Int = litDouble(e, what).toInt
+    def hll(e: Expression, p: Int): Expression = ColumnBridge.expression(
+      hll_sketch_estimate(hll_sketch_agg(ColumnBridge.column(e), p)))
     RegistryBridge.register(spark, "hll_distinct", {
-      case Seq(e) => Sketches.HllAgg(XxHash64(Seq(e), 42L), 14)
-      case Seq(e, p) => Sketches.HllAgg(XxHash64(Seq(e), 42L), litInt(p, "precision"))
+      case Seq(e) => hll(e, 14)
+      case Seq(e, p) => hll(e, litInt(p, "precision"))
       case _ => throw new IllegalArgumentException("hll_distinct(col[, precision])")
     })
     RegistryBridge.register(spark, "tdigest_quantiles", {

@@ -320,115 +320,4 @@ object Sketches {
       copy(inputAggBufferOffset = o)
     override def prettyName: String = "topk_sketch"
   }
-
-  // ------------------------------------------------------------ HyperLogLog
-
-  /** Distinct-count estimate via classic HyperLogLog (Flajolet, Fusy,
-    * Gandouet & Meunier 2007, "HyperLogLog: the analysis of a
-    * near-optimal cardinality estimation algorithm") with the paper's
-    * small-range linear-counting correction. The reference exposes the
-    * same capability through its incremental-agg runtime
-    * (internal/xsql/funcs_agg.go count distinct path) but keeps exact
-    * per-group sets; the sketch is the 100 TB form: 2^p byte registers
-    * per group regardless of cardinality, and register-max merge is
-    * ORDER-INDEPENDENT, so results are bit-deterministic at any
-    * partition count — unlike every other floating aggregate here.
-    *
-    * `item` is hashed with xxhash64 at the column layer; the aggregate
-    * consumes the 64-bit hash directly (top p bits → register, leading
-    * zeros of the rest → rank).
-    */
-  def hllDistinct(item: Column, p: Int = 14): Column = {
-    require(p >= 4 && p <= 18, s"hll precision $p outside [4,18]")
-    // hash only non-null inputs: xxhash64(null) is the (non-null) seed,
-    // which would count NULL as one extra distinct and diverge from
-    // count(DISTINCT) semantics; the null passes through `when` and is
-    // skipped by the aggregate's null check
-    import org.apache.spark.sql.functions.{when, xxhash64}
-    ColumnBridge.column(HllAgg(
-      ColumnBridge.expression(when(item.isNotNull, xxhash64(item))), p)
-      .toAggregateExpression())
-  }
-
-  final class Hll(val p: Int) extends Serializable {
-    val m: Int = 1 << p
-    val regs: Array[Byte] = new Array[Byte](m)
-
-    def add(h: Long): Unit = {
-      val idx = (h >>> (64 - p)).toInt
-      val rest = h << p
-      val rank = (if (rest == 0) 64 - p else java.lang.Long.numberOfLeadingZeros(rest)) + 1
-      if (rank > regs(idx)) regs(idx) = rank.toByte
-    }
-
-    def mergeIn(o: Hll): Unit = {
-      var i = 0
-      while (i < m) { if (o.regs(i) > regs(i)) regs(i) = o.regs(i); i += 1 }
-    }
-
-    def estimate: Long = {
-      var sum = 0.0; var zeros = 0; var i = 0
-      while (i < m) {
-        val r = regs(i)
-        sum += 1.0 / (1L << r)
-        if (r == 0) zeros += 1
-        i += 1
-      }
-      val alpha = m match {
-        case 16 => 0.673
-        case 32 => 0.697
-        case 64 => 0.709
-        case _  => 0.7213 / (1 + 1.079 / m)
-      }
-      val e = alpha * m * m / sum
-      val corrected =
-        if (e <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros) else e
-      math.round(corrected)
-    }
-  }
-
-  case class HllAgg(
-      child: Expression,
-      p: Int,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Hll] {
-
-    override def createAggregationBuffer(): Hll = new Hll(p)
-
-    override def update(buf: Hll, input: InternalRow): Hll = {
-      val v = child.eval(input)
-      if (v != null) buf.add(v.asInstanceOf[Long])
-      buf
-    }
-
-    override def merge(a: Hll, b: Hll): Hll = { a.mergeIn(b); a }
-
-    override def eval(buf: Hll): Any = buf.estimate
-
-    override def serialize(buf: Hll): Array[Byte] = {
-      val bb = ByteBuffer.allocate(4 + buf.m)
-      bb.putInt(buf.p)
-      bb.put(buf.regs)
-      bb.array()
-    }
-
-    override def deserialize(bytes: Array[Byte]): Hll = {
-      val bb = ByteBuffer.wrap(bytes)
-      val h = new Hll(bb.getInt)
-      bb.get(h.regs)
-      h
-    }
-
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = false
-    override def children: Seq[Expression] = Seq(child)
-    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-      copy(child = c.head)
-    override def withNewMutableAggBufferOffset(o: Int): HllAgg =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): HllAgg =
-      copy(inputAggBufferOffset = o)
-    override def prettyName: String = "hll_distinct"
-  }
 }

@@ -48,14 +48,14 @@ object SketchQueries {
         .select(col("source"), (col("rank") + 1).as("rank"),
           col("e.item").as("lang"), col("e.count_hi").as("cnt"))),
 
-    // per-type distinct users via the mergeable HLL sketch (p=14 →
-    // 16 KiB state per group at ANY cardinality; register-max merge is
-    // order-independent, so the golden is bit-stable at any core
-    // count). SketchSpec pins the error bound vs the exact count.
+    // per-type distinct users via Spark's HLL sketch (datasketches,
+    // lgConfigK 14: bounded state per group at ANY cardinality; the
+    // sketch union is order-independent, so the golden is stable at any
+    // core count). tools/check.py bounds it against the exact count.
     "q_distinct_hll" -> ((s, d) =>
       Tables(s, d, "events")
         .groupBy(col("event_type"))
-        .agg(Sketches.hllDistinct(col("user_id")).as("est_users"),
+        .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("est_users"),
           count(lit(1)).as("n_events"))),
 
     // exact corpus-wide heavy hitters: top-20 word trigrams

@@ -602,9 +602,13 @@ class FunctionsSpec extends SparkSuite {
       """SELECT event_type, hll_distinct(user_id) AS est FROM ev_sketch GROUP BY 1""")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val api = Tables(spark, sf, "events").groupBy(col("event_type"))
-      .agg(graft.functions.Sketches.hllDistinct(col("user_id")).as("est"))
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(sql === api)
+    // hll_distinct skips NULLs like count(DISTINCT)
+    spark.sql("SELECT * FROM VALUES ('a'), ('b'), (NULL), ('a'), (NULL), ('c') AS t(v)")
+      .createOrReplaceTempView("hll_nulls")
+    assert(spark.sql("SELECT hll_distinct(v) FROM hll_nulls").first().getLong(0) === 3L)
     // topk_sketch in the exact regime reproduces plain counts
     val top = spark.sql(
       """SELECT topk_sketch(event_type, 16, 1) AS t FROM ev_sketch""").first()
@@ -623,6 +627,12 @@ class FunctionsSpec extends SparkSuite {
     // shape parameters must be literals
     intercept[Exception](spark.sql(
       "SELECT hll_distinct(user_id, value) FROM ev_sketch").collect())
+    // and the precision must be in the sketch's range
+    for (p <- Seq(0, 30)) {
+      val e = intercept[Exception](spark.sql(
+        s"SELECT hll_distinct(user_id, $p) FROM ev_sketch").collect())
+      assert(e.getMessage.contains("between 4 and 21"), e.getMessage)
+    }
   }
 
   test("mqtt()/window_trigger() translate through the rule dialect") {

@@ -238,9 +238,9 @@ class PlanSpec extends SparkSuite {
   test("hll distinct aggregates two-phase: partial sketches before the shuffle") {
     val df = SparkEntry.queries("q_distinct_hll")(spark, sf)
     val p = df.queryExecution.executedPlan.toString
-    // ObjectHashAggregate partial (hll_distinct) on the map side, then
+    // ObjectHashAggregate partial (hll_sketch_agg) on the map side, then
     // one key exchange, then the merge — the mergeable-sketch contract
-    assert(p.contains("hll_distinct"), p.take(1500))
+    assert(p.contains("hll_sketch_agg"), p.take(1500))
     val aggs = p.linesIterator.count(_.contains("HashAggregate"))
     assert(aggs >= 2, s"expected partial+final aggregate pair:\n${p.take(1500)}")
   }

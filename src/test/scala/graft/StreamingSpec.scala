@@ -388,16 +388,15 @@ class StreamingSpec extends SparkSuite {
   test("streaming hll sketch: incremental per-group estimates converge to the batch result") {
     // TypedImperativeAggregate under update-mode streaming: partial
     // sketches merge across micro-batches exactly like across
-    // partitions (register-max is order-independent), so the final
+    // partitions (the HLL union is order-independent), so the final
     // streamed estimate equals the batch aggregate bit-for-bit
-    import graft.functions.Sketches
     val ev = graft.Tables(spark, sf, "events")
       .select(col("event_type"), col("user_id"))
     val rows = ev.collect().map(r => (r.getString(0), r.getLong(1)))
     val ms = MemoryStream[(String, Long)]
     val q = ms.toDS().toDF("event_type", "user_id")
       .groupBy(col("event_type"))
-      .agg(Sketches.hllDistinct(col("user_id")).as("est"))
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("est"))
       .writeStream.format("memory").queryName("hll_out")
       .outputMode(OutputMode.Update).start()
     try {
@@ -408,7 +407,7 @@ class StreamingSpec extends SparkSuite {
       val got = spark.table("hll_out").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val want = ev.groupBy(col("event_type"))
-        .agg(Sketches.hllDistinct(col("user_id")).as("est"))
+        .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("est"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got === want)
     } finally q.stop()
