@@ -340,6 +340,11 @@ object GraftFunctions {
     *  - `hll_distinct(x[, p])`: `hll_sketch_estimate(hll_sketch_agg(x, p))`,
     *    p = 14 by default. NULLs are not counted; p outside [4, 21]
     *    fails with HLL_INVALID_LG_K.
+    *  - `tdigest_quantiles(x, a, q1[, q2, ...])`: `percentile_approx`
+    *    of x as a double at accuracy a, so the rank error is at most
+    *    1/a. Not KLL: datasketches' KLL compacts with an unseeded
+    *    random source, so its answer changes from run to run, while
+    *    Greenwald-Khanna is deterministic for a fixed input order.
     */
   private def registerSketches(spark: SparkSession): Unit = {
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -361,11 +366,12 @@ object GraftFunctions {
       case _ => throw new IllegalArgumentException("hll_distinct(col[, precision])")
     })
     RegistryBridge.register(spark, "tdigest_quantiles", {
-      case e +: comp +: qs if qs.nonEmpty =>
-        Sketches.TDigestAgg(e, litDouble(comp, "compression"),
-          qs.map(litDouble(_, "quantile")))
+      case e +: acc +: qs if qs.nonEmpty => ColumnBridge.expression(percentile_approx(
+        ColumnBridge.column(e).cast("double"),
+        array(qs.map(q => lit(litDouble(q, "quantile"))): _*),
+        lit(litInt(acc, "accuracy"))))
       case _ => throw new IllegalArgumentException(
-        "tdigest_quantiles(col, compression, q1[, q2, ...])")
+        "tdigest_quantiles(col, accuracy, q1[, q2, ...])")
     })
     RegistryBridge.register(spark, "topk_sketch", {
       case Seq(e, cap, k) =>

@@ -15,15 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * statistics at 100 TB, where exact per-group state (full value lists,
   * full item maps) would not fit an executor.
   *
-  * Both are Catalyst `TypedImperativeAggregate`s, so Spark runs them
+  * It is a Catalyst `TypedImperativeAggregate`, so Spark runs them
   * as ordinary two-phase aggregates: partial sketches on the map side,
   * binary-serialized into the shuffle, merged on the reduce side —
   * state per (group × sketch) is bounded by the sketch parameters, not
   * by the data.
   *
-  *  - [[TDigestAgg]]: quantiles via a merging t-digest (Dunning & Ertl,
-  *    arXiv:1902.04023). Sub-percent rank error at compression 100
-  *    with ~centroids ≤ 2·compression doubles of state.
   *  - [[SpaceSavingAgg]]: heavy hitters via SpaceSaving (Metwally,
   *    Agrawal & El Abbadi 2005, "Efficient computation of frequent and
   *    top-k elements in data streams"). Guarantees every item with
@@ -32,175 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Sketches {
 
-  def tdigestQuantiles(value: Column, compression: Double, qs: Seq[Double]): Column =
-    ColumnBridge.column(TDigestAgg(ColumnBridge.expression(value), compression, qs)
-      .toAggregateExpression())
-
   def topkSketch(item: Column, capacity: Int, k: Int): Column =
     ColumnBridge.column(SpaceSavingAgg(ColumnBridge.expression(item), capacity, k)
       .toAggregateExpression())
-
-  // ---------------------------------------------------------------- t-digest
-
-  /** Centroid buffer: `n` live (mean, weight) pairs + an unsorted
-    * append tail; compressed (sorted + k-scale merged) when the tail
-    * fills or at serialize/eval time.
-    */
-  final class TDigest(val compression: Double) extends Serializable {
-    // capacity: enough room that compression triggers rarely; the
-    // merged prefix never exceeds ~2*compression centroids
-    private val cap = math.max(64, (8 * compression).toInt)
-    var means: Array[Double] = new Array[Double](cap)
-    var weights: Array[Double] = new Array[Double](cap)
-    var n: Int = 0            // merged prefix length
-    var tail: Int = 0         // appended-but-unmerged suffix length
-    var total: Double = 0.0
-
-    private def kScale(q: Double): Double =
-      compression / (2 * math.Pi) * math.asin(2 * math.min(1.0, math.max(0.0, q)) - 1)
-
-    def add(x: Double, w: Double = 1.0): Unit = {
-      if (n + tail == means.length) compress()
-      means(n + tail) = x
-      weights(n + tail) = w
-      tail += 1
-      total += w
-    }
-
-    def addAll(other: TDigest): Unit = {
-      var i = 0
-      while (i < other.n + other.tail) {
-        add(other.means(i), other.weights(i))
-        i += 1
-      }
-    }
-
-    /** Sort all live centroids by mean and greedily merge neighbors
-      * while the merged cluster stays within one k-unit of scale —
-      * small clusters at the tails (accurate extreme quantiles), large
-      * in the middle.
-      */
-    def compress(): Unit = {
-      val live = n + tail
-      if (live == 0) { n = 0; tail = 0; return }
-      val idx = (0 until live).sortBy(means(_)).toArray
-      val ms = idx.map(means(_))
-      val ws = idx.map(weights(_))
-      var out = 0
-      var acc = 0.0                 // weight before the current cluster
-      var cm = ms(0); var cw = ws(0)
-      var kLo = kScale(0.0)
-      var i = 1
-      while (i < live) {
-        val qHi = (acc + cw + ws(i)) / total
-        if (kScale(qHi) - kLo <= 1.0) {
-          // fold centroid i into the current cluster
-          val w2 = cw + ws(i)
-          cm = cm + (ms(i) - cm) * ws(i) / w2
-          cw = w2
-        } else {
-          means(out) = cm; weights(out) = cw; out += 1
-          acc += cw
-          kLo = kScale(acc / total)
-          cm = ms(i); cw = ws(i)
-        }
-        i += 1
-      }
-      means(out) = cm; weights(out) = cw; out += 1
-      n = out
-      tail = 0
-    }
-
-    /** Interpolated quantile: centroids are treated as mass centered
-      * at their mean; linear interpolation between successive centroid
-      * midpoints.
-      */
-    def quantile(q: Double): Double = {
-      compress()
-      if (n == 0) return Double.NaN
-      if (n == 1) return means(0)
-      val target = q * total
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val mid = acc + weights(i) / 2
-        if (target < mid || i == n - 1) {
-          if (i == 0 && target < weights(0) / 2) return means(0)
-          if (i == n - 1 && target >= acc + weights(i) / 2) return means(n - 1)
-          val prevMid = acc - weights(i - 1) / 2
-          val frac = (target - prevMid) / (mid - prevMid)
-          return means(i - 1) + frac * (means(i) - means(i - 1))
-        }
-        acc += weights(i)
-        i += 1
-      }
-      means(n - 1)
-    }
-
-    def toBytes: Array[Byte] = {
-      compress()
-      val bb = ByteBuffer.allocate(8 + 4 + 16 * n)
-      bb.putDouble(compression).putInt(n)
-      var i = 0
-      while (i < n) { bb.putDouble(means(i)).putDouble(weights(i)); i += 1 }
-      bb.array()
-    }
-  }
-
-  object TDigest {
-    def fromBytes(bytes: Array[Byte]): TDigest = {
-      val bb = ByteBuffer.wrap(bytes)
-      val d = new TDigest(bb.getDouble)
-      val k = bb.getInt
-      var i = 0
-      while (i < k) { d.add(bb.getDouble, bb.getDouble); i += 1 }
-      d
-    }
-  }
-
-  case class TDigestAgg(
-      child: Expression,
-      compression: Double,
-      qs: Seq[Double],
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TDigest] {
-
-    override def createAggregationBuffer(): TDigest = new TDigest(compression)
-
-    override def update(buf: TDigest, input: InternalRow): TDigest = {
-      val v = child.eval(input)
-      if (v != null) buf.add(v match {
-        case d: Double => d
-        case f: Float => f.toDouble
-        case l: Long => l.toDouble
-        case i: Int => i.toDouble
-        case d: java.math.BigDecimal => d.doubleValue()
-        case d: org.apache.spark.sql.types.Decimal => d.toDouble
-        case o => o.toString.toDouble
-      })
-      buf
-    }
-
-    override def merge(a: TDigest, b: TDigest): TDigest = { a.addAll(b); a }
-
-    override def eval(buf: TDigest): Any =
-      new GenericArrayData(qs.map(buf.quantile).toArray)
-
-    override def serialize(buf: TDigest): Array[Byte] = buf.toBytes
-    override def deserialize(bytes: Array[Byte]): TDigest = TDigest.fromBytes(bytes)
-
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullable: Boolean = false
-    override def children: Seq[Expression] = Seq(child)
-    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-      copy(child = c.head)
-    override def withNewMutableAggBufferOffset(o: Int): TDigestAgg =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): TDigestAgg =
-      copy(inputAggBufferOffset = o)
-    override def prettyName: String = "tdigest_quantiles"
-  }
 
   // ------------------------------------------------------------ SpaceSaving
 

@@ -24,15 +24,16 @@ object SketchQueries {
   private def docs(s: SparkSession, d: String) = Tables(s, d, "documents")
 
   val qs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // per-source doc-length quantiles via mergeable t-digest state
+    // per-source doc-length quantiles via Spark's Greenwald-Khanna
+    // sketch at accuracy 100 (rank error <= 1%)
     "q_quantiles_tdigest" -> ((s, d) =>
       docs(s, d)
         .select(col("source"), col("n_chars"), col("doc_id"))
         .repartition(8, col("source"))
         .sortWithinPartitions(col("source"), col("n_chars"), col("doc_id"))
         .groupBy(col("source"))
-        .agg(Sketches.tdigestQuantiles(col("n_chars").cast("double"), 100.0,
-          Seq(0.5, 0.9, 0.99)).as("qv"))
+        .agg(percentile_approx(col("n_chars").cast("double"),
+          array(lit(0.5), lit(0.9), lit(0.99)), lit(100)).as("qv"))
         .select(col("source"),
           round(element_at(col("qv"), 1), 2).as("p50"),
           round(element_at(col("qv"), 2), 2).as("p90"),
