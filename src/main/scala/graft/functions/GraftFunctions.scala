@@ -345,6 +345,7 @@ object GraftFunctions {
     *    1/a. Not KLL: datasketches' KLL compacts with an unseeded
     *    random source, so its answer changes from run to run, while
     *    Greenwald-Khanna is deterministic for a fixed input order.
+    *  - `topk_sketch(x, cap, k)`: [[topkSketch]].
     */
   private def registerSketches(spark: SparkSession): Unit = {
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -374,9 +375,31 @@ object GraftFunctions {
         "tdigest_quantiles(col, accuracy, q1[, q2, ...])")
     })
     RegistryBridge.register(spark, "topk_sketch", {
-      case Seq(e, cap, k) =>
-        Sketches.SpaceSavingAgg(e, litInt(cap, "capacity"), litInt(k, "k"))
+      case Seq(e, cap, k) => ColumnBridge.expression(topkSketch(
+        ColumnBridge.column(e), litInt(cap, "capacity"), litInt(k, "k")))
       case _ => throw new IllegalArgumentException("topk_sketch(col, capacity, k)")
     })
+  }
+
+  /** The `k` most frequent non-NULL values of `item`, as
+    * array<struct<item: string, count: bigint>> ordered by count desc,
+    * then item asc. Spark's `approx_top_k` (a datasketches ItemsSketch
+    * sized for `capacity` items) returns tied counts in arbitrary
+    * order, so all `capacity` of its items are sorted before the cut
+    * to `k`. Counts are exact while a group has at most `capacity`
+    * distinct values.
+    */
+  def topkSketch(item: Column, capacity: Int, k: Int): Column = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    import org.apache.spark.sql.catalyst.expressions.{IsNotNull, Literal}
+    val x = ColumnBridge.expression(item.cast("string"))
+    // FILTER (WHERE x IS NOT NULL): approx_top_k counts NULL as an item
+    val top = ColumnBridge.column(UnresolvedFunction(Seq("approx_top_k"),
+      Seq(x, Literal(capacity), Literal(capacity)), isDistinct = false,
+      filter = Some(IsNotNull(x))))
+    slice(array_sort(top, (a, b) =>
+      when(a("count") > b("count"), -1).when(a("count") < b("count"), 1)
+        .when(a("item") < b("item"), -1).when(a("item") > b("item"), 1)
+        .otherwise(0)), 1, k)
   }
 }

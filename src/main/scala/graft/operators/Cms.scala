@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Count-min sketch as a TABLE: d hash rows × w buckets of counts —
   * the bounded-size frequency summary for corpora whose key
-  * cardinality dwarfs memory (reference sibling of the SpaceSaving
-  * top-k and HLL sketches in functions/Sketches.scala; Cormode &
-  * Muthukrishnan 2005). Estimates overcount, never undercount:
+  * cardinality dwarfs memory (sibling of the top-k and HLL sketches,
+  * which use Spark's built-in `approx_top_k` and `hll_sketch_agg`;
+  * Cormode & Muthukrishnan 2005). It is kept beside Spark's
+  * `count_min_sketch` because its md5-prefix buckets replay in DuckDB,
+  * so q_sketch_cms has an exact oracle. Estimates overcount, never undercount:
   * est(k) = min over rows of the bucket count, so
   * true ≤ est ≤ true + εN with ε = e/w at confidence 1 − (1/e)^d.
   *

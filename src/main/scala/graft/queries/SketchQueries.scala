@@ -3,20 +3,21 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Sketches
+import graft.functions.GraftFunctions
 import graft.operators.TextOps
 
-/** SURVEY §2.9 — sketch-aggregate queries: t-digest quantiles,
-  * SpaceSaving top-k, and exact heavy-hitter n-gram mining.
+/** SURVEY §2.9 — sketch-aggregate queries over Spark's built-in
+  * sketches (quantiles, top-k, HLL distinct count), count-min
+  * sketches, and exact heavy-hitter n-gram mining.
   *
-  * q_topk_sketch runs the SpaceSaving aggregate with capacity ≥ the
-  * group's item cardinality, where its estimates are provably exact —
-  * so the sketch path itself carries a full DuckDB oracle. The
-  * eviction/approximation regime is pinned by SketchSpec.
-  * q_quantiles_tdigest is golden-pinned (approximation has no SQL
-  * replay); the rank-error bound vs exact percentiles is SketchSpec's
-  * job. The query repartitions by group and sorts within partitions,
-  * making the digest's update order — and thus the golden — fully
+  * q_topk_sketch runs `GraftFunctions.topkSketch` with capacity ≥ the
+  * group's item cardinality, where its counts are exact — so the
+  * sketch path itself carries a full DuckDB oracle. The eviction
+  * regime is pinned by SketchSpec. q_quantiles_tdigest and
+  * q_distinct_hll are golden-pinned (approximation has no SQL replay),
+  * and tools/check.py bounds both against exact DuckDB truth. The
+  * quantile query repartitions by group and sorts within partitions,
+  * so the sketch's input order — and thus the golden — is
   * deterministic at any core count.
   */
 object SketchQueries {
@@ -39,15 +40,15 @@ object SketchQueries {
           round(element_at(col("qv"), 2), 2).as("p90"),
           round(element_at(col("qv"), 3), 2).as("p99"))),
 
-    // top-2 languages per source via the SpaceSaving aggregate; with
+    // top-2 languages per source via the topk_sketch aggregate; with
     // capacity 16 ≥ 5 distinct langs the sketch is exact → oracled
     "q_topk_sketch" -> ((s, d) =>
       docs(s, d)
         .groupBy(col("source"))
-        .agg(Sketches.topkSketch(col("lang"), 16, 2).as("top"))
+        .agg(GraftFunctions.topkSketch(col("lang"), 16, 2).as("top"))
         .select(col("source"), posexplode(col("top")).as(Seq("rank", "e")))
         .select(col("source"), (col("rank") + 1).as("rank"),
-          col("e.item").as("lang"), col("e.count_hi").as("cnt"))),
+          col("e.item").as("lang"), col("e.count").as("cnt"))),
 
     // per-type distinct users via Spark's HLL sketch (datasketches,
     // lgConfigK 14: bounded state per group at ANY cardinality; the

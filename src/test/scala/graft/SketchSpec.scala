@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Sketches
-import graft.functions.Sketches.SpaceSaving
+import graft.functions.GraftFunctions
+import org.apache.datasketches.frequencies.ItemsSketch
+import org.apache.spark.sql.catalyst.expressions.aggregate.ApproxTopK
 
-/** Sketch aggregates: t-digest rank-error bounds vs exact quantiles,
-  * merge ≡ whole-stream equivalence, SpaceSaving heavy-hitter
-  * guarantee and bound soundness, serialization round-trips, and the
+/** Sketch aggregates: rank-error bounds of `percentile_approx` (the
+  * tdigest_quantiles builder) vs exact quantiles, HLL accuracy and
+  * merge behaviour, the topk_sketch heavy-hitter guarantee, count
+  * bounds, NULL skipping and tie order, count-min sketches, and the
   * distributed (partial → shuffle → merge) path through the DataFrame
   * API.
   */
@@ -56,44 +58,58 @@ class SketchSpec extends SparkSuite {
     }
   }
 
-  test("spacesaving: every item with freq > n/capacity survives; bounds sound") {
-    // zipf-ish stream: item i appears ~ 10000/i times, capacity 20
-    val stream = (1 to 60).flatMap(i => Seq.fill(10000 / i)(s"item$i"))
-    val shuffled = new scala.util.Random(11).shuffle(stream)
-    val s = new SpaceSaving(20)
-    shuffled.foreach(s.add(_))
+  /** (item, count) rows of topk_sketch over a string column `v`. */
+  private def topk(df: org.apache.spark.sql.DataFrame, capacity: Int, k: Int): Seq[(String, Long)] =
+    df.agg(GraftFunctions.topkSketch($"v", capacity, k)).first()
+      .getSeq[org.apache.spark.sql.Row](0).map(r => r.getString(0) -> r.getLong(1))
+
+  test("topk_sketch: every item above the ItemsSketch error bound survives; counts sound") {
+    // 5 heavy items over 300 light ones, capacity 64 < 305 distinct:
+    // the sketch evicts. Its map holds calMaxMapSize(64) = 128 slots,
+    // so its error is at most eps·n with eps = 3.5/128; an item with
+    // true count > 2·eps·n keeps a lower bound above the error and is
+    // reported, and each reported count lies in [truth, truth + eps·n]
+    val heavy = Seq(3000, 2500, 2000, 1500, 1000).zipWithIndex
+      .flatMap { case (c, i) => Seq.fill(c)(s"heavy$i") }
+    val stream = heavy ++ (1 to 300).flatMap(i => Seq.fill(10)(s"light$i"))
+    val df = new scala.util.Random(11).shuffle(stream).toDF("v").repartition(4)
     val exact = stream.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val n = stream.size.toLong
-    val kept = s.topK(20).map(_._1).toSet
-    exact.filter(_._2 > n / 20).keys.foreach(i =>
-      assert(kept.contains(i), s"heavy hitter $i evicted"))
-    s.topK(20).foreach { case (item, cnt, err) =>
-      val truth = exact.getOrElse(item, 0L)
-      assert(truth <= cnt && cnt - err <= truth,
-        s"$item: bounds [${cnt - err},$cnt] miss truth $truth")
+    val eps = ItemsSketch.getEpsilon(ApproxTopK.calMaxMapSize(64))
+    val got = topk(df, 64, 64)
+    exact.filter(_._2 > 2 * eps * n).keys.foreach(i =>
+      assert(got.exists(_._1 == i), s"heavy hitter $i missing from $got"))
+    got.foreach { case (item, cnt) =>
+      val truth = exact(item)
+      assert(truth <= cnt && cnt <= truth + eps * n,
+        s"$item: count $cnt outside [$truth, ${truth + eps * n}]")
     }
+    assert(got.take(5).map(_._1) == (0 until 5).map(i => s"heavy$i"))
   }
 
-  test("spacesaving: merge of shards covers shard-spanning heavy hitters") {
-    val shard1 = Seq.fill(500)("big") ++ (1 to 300).map(i => s"a$i")
-    val shard2 = Seq.fill(500)("big") ++ (1 to 300).map(i => s"b$i")
-    val s1 = new SpaceSaving(50); shard1.foreach(s1.add(_))
-    val s2 = new SpaceSaving(50); shard2.foreach(s2.add(_))
-    s1.mergeIn(s2)
-    val top = s1.topK(1)
+  test("topk_sketch: merge of shards covers shard-spanning heavy hitters") {
+    // each shard alone is past its capacity; "big" is heavy only across both
+    def shard(tag: String) =
+      (Seq.fill(500)("big") ++ (1 to 300).map(i => s"$tag$i")).toDF("v").coalesce(1)
+    val top = topk(shard("a").union(shard("b")), 50, 1)
     assert(top.head._1 === "big")
     assert(top.head._2 >= 1000, s"merged estimate ${top.head._2} under-counts")
   }
 
-  test("spacesaving: exact when capacity >= cardinality (the oracled regime)") {
+  test("topk_sketch: exact when capacity >= cardinality (the oracled regime)") {
     val stream = new scala.util.Random(5).shuffle(
       (1 to 8).flatMap(i => Seq.fill(i * 7)(s"v$i")))
-    val s = new SpaceSaving(16)
-    stream.foreach(s.add(_))
-    s.topK(8).foreach { case (item, cnt, err) =>
-      val truth = item.drop(1).toLong * 7
-      assert(cnt === truth && err === 0L)
-    }
+    val got = topk(stream.toDF("v").repartition(4), 16, 8)
+    assert(got == (8 to 1 by -1).map(i => s"v$i" -> i * 7L))
+  }
+
+  test("topk_sketch: skips NULLs and breaks ties at rank k by item") {
+    // NULL is the most frequent value; c and a tie at rank 1-2, b and
+    // d at rank 3-4, and the input order lists the larger item first
+    val df = Seq("c", null, "d", "a", null, "c", "b", null, "a").toDF("v")
+    assert(topk(df, 16, 2) == Seq("a" -> 2L, "c" -> 2L))
+    assert(topk(df, 16, 3) == Seq("a" -> 2L, "c" -> 2L, "b" -> 1L))
+    assert(topk(df.where($"v".isNull), 16, 2).isEmpty)
   }
 
   test("distributed path: sketch aggregates agree with exact over the documents table") {
@@ -116,11 +132,11 @@ class SketchSpec extends SparkSuite {
       assert(err <= math.max(0.02, 2.0 / counts(src)),
         s"$src: est $p50 (rank err $err) vs exact ${exact(src)}")
     }
-    // SpaceSaving with big capacity == exact lang counts
+    // topk_sketch with capacity above the cardinality == exact lang counts
     val sk = docs.groupBy($"source")
-      .agg(Sketches.topkSketch($"lang", 16, 16).as("top"))
+      .agg(GraftFunctions.topkSketch($"lang", 16, 16).as("top"))
       .select($"source", explode($"top").as("e"))
-      .select($"source", $"e.item".as("lang"), $"e.count_hi".as("cnt"))
+      .select($"source", $"e.item".as("lang"), $"e.count".as("cnt"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val exactLang = docs.groupBy($"source", $"lang").count()
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap

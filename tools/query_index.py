@@ -29,9 +29,9 @@ QDIR = os.path.join(REPO, "src/main/scala/graft/queries")
 
 OP_RE = re.compile(
     r"\b((?:Dedup|Search|Knn|TextOps|Bpe|Pca|Temporal|Multimodal|"
-    r"Classifier|UnigramLm|Layout|Sketches|SketchFunctions|"
+    r"Classifier|UnigramLm|Layout|GraftFunctions|SketchFunctions|"
     r"BpeFunctions|VectorFunctions|TextHashFunctions|GeoFunctions|"
-    r"ImageOps)\.\w+)")
+    r"ImageOps)\.(?!registerAll\b)\w+)")
 DEF_RE = re.compile(r'^\s*"(q_[a-z0-9_]+)"\s*->')
 
 
