@@ -388,8 +388,9 @@ class StreamingSpec extends SparkSuite {
   test("streaming hll sketch: incremental per-group estimates converge to the batch result") {
     // TypedImperativeAggregate under update-mode streaming: partial
     // sketches merge across micro-batches exactly like across
-    // partitions (the HLL union is order-independent), so the final
-    // streamed estimate equals the batch aggregate bit-for-bit
+    // partitions (at this scale the HLL sketch holds exact coupons,
+    // whose union is order-independent), so the final streamed
+    // estimate equals the batch aggregate bit-for-bit
     val ev = graft.Tables(spark, sf, "events")
       .select(col("event_type"), col("user_id"))
     val rows = ev.collect().map(r => (r.getString(0), r.getLong(1)))
