@@ -51,15 +51,13 @@ object SketchQueries {
           col("e.item").as("lang"), col("e.count").as("cnt"))),
 
     // per-type distinct users via Spark's HLL sketch (datasketches,
-    // lgConfigK 14: bounded state per group at ANY cardinality). Up to
-    // about 1.5k distinct users per group the sketch holds exact
-    // coupons, so the goldens do not depend on the partition count;
-    // past that a union of partials reads a different estimator than
-    // one sketch. tools/check.py bounds it against the exact count.
+    // lgConfigK 14: bounded state per group at ANY cardinality; the
+    // estimate does not depend on the partition count).
+    // tools/check.py bounds it against the exact count.
     "q_distinct_hll" -> ((s, d) =>
       Tables(s, d, "events")
         .groupBy(col("event_type"))
-        .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("est_users"),
+        .agg(GraftFunctions.hllDistinct(col("user_id")).as("est_users"),
           count(lit(1)).as("n_events"))),
 
     // exact corpus-wide heavy hitters: top-20 word trigrams

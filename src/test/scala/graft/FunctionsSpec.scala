@@ -602,13 +602,27 @@ class FunctionsSpec extends SparkSuite {
       """SELECT event_type, hll_distinct(user_id) AS est FROM ev_sketch GROUP BY 1""")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val api = Tables(spark, sf, "events").groupBy(col("event_type"))
-      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("est"))
+      .agg(GraftFunctions.hllDistinct(col("user_id")).as("est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(sql === api)
     // hll_distinct skips NULLs like count(DISTINCT)
     spark.sql("SELECT * FROM VALUES ('a'), ('b'), (NULL), ('a'), (NULL), ('c') AS t(v)")
       .createOrReplaceTempView("hll_nulls")
     assert(spark.sql("SELECT hll_distinct(v) FROM hll_nulls").first().getLong(0) === 3L)
+    // and takes any input type, counting what count(DISTINCT) counts
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  (1.5D, TIMESTAMP'2024-01-01 00:00:00', 1.50BD, DATE'2024-01-01', 1S),
+        |  (0.0D, TIMESTAMP'2024-01-01 00:00:01', 2.25BD, DATE'2024-01-02', 2S),
+        |  (-0.0D, TIMESTAMP'2024-01-01 00:00:00', 1.50BD, DATE'2024-01-01', 1S),
+        |  (NULL, NULL, NULL, NULL, NULL),
+        |  (2.5D, TIMESTAMP'2024-01-02 00:00:00', 3.00BD, DATE'2024-01-03', 3S)
+        |  AS t(d, ts, dec, dt, s)""".stripMargin).createOrReplaceTempView("hll_types")
+    for (c <- Seq("d", "ts", "dec", "dt", "s")) {
+      val r = spark.sql(
+        s"SELECT hll_distinct($c), count(DISTINCT $c) FROM hll_types").first()
+      assert(r.getLong(0) === r.getLong(1), c)
+    }
     // topk_sketch in the exact regime reproduces plain counts
     val top = spark.sql(
       """SELECT topk_sketch(event_type, 16, 1) AS t FROM ev_sketch""").first()

@@ -388,8 +388,8 @@ class StreamingSpec extends SparkSuite {
   test("streaming hll sketch: incremental per-group estimates converge to the batch result") {
     // TypedImperativeAggregate under update-mode streaming: partial
     // sketches merge across micro-batches exactly like across
-    // partitions (at this scale the HLL sketch holds exact coupons,
-    // whose union is order-independent), so the final streamed
+    // partitions (the estimate reads the merged sketch's coupons or
+    // registers, not the merge order), so the final streamed
     // estimate equals the batch aggregate bit-for-bit
     val ev = graft.Tables(spark, sf, "events")
       .select(col("event_type"), col("user_id"))
@@ -397,7 +397,7 @@ class StreamingSpec extends SparkSuite {
     val ms = MemoryStream[(String, Long)]
     val q = ms.toDS().toDF("event_type", "user_id")
       .groupBy(col("event_type"))
-      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("est"))
+      .agg(graft.functions.GraftFunctions.hllDistinct(col("user_id")).as("est"))
       .writeStream.format("memory").queryName("hll_out")
       .outputMode(OutputMode.Update).start()
     try {
@@ -408,7 +408,7 @@ class StreamingSpec extends SparkSuite {
       val got = spark.table("hll_out").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val want = ev.groupBy(col("event_type"))
-        .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("est"))
+        .agg(graft.functions.GraftFunctions.hllDistinct(col("user_id")).as("est"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got === want)
     } finally q.stop()

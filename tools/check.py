@@ -27,8 +27,8 @@ def canon(cols, rows):
     out = sorted(tuple(norm(r[i]) for i in order) for r in rows)
     return [cols[i] for i in order], out
 
-# HLL at p=14 (m = 2^14 registers) has standard error 1.04/sqrt(m);
-# allow three of them
+# q_distinct_hll runs GraftFunctions.hllDistinct at its default p=14
+# (m = 2^14 registers): standard error 1.04/sqrt(m); allow three
 HLL_REL_ERR = 3 * 1.04 / math.sqrt(2 ** 14)
 # quantile sketches at accuracy/compression 100: rank error <= 1/100
 RANK_ERR = 0.01
