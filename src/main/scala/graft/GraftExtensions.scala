@@ -4,37 +4,22 @@ import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import org.apache.spark.sql.graft.ColumnBridge
 
 /** Cluster-wide registration entry point:
   *
   * {{{ spark-submit --conf spark.sql.extensions=graft.GraftExtensions … }}}
   *
-  * injects every eKuiper-named function (GraftFunctions.builders) into
-  * each new session's FunctionRegistry — the idiomatic alternative to
-  * calling GraftFunctions.registerAll(spark) per session. Functions
+  * injects every eKuiper-named function (GraftFunctions.registrations)
+  * into each new session's FunctionRegistry — the idiomatic alternative
+  * to calling GraftFunctions.registerAll(spark) per session. Functions
   * are Expression builders (codegen), not UDFs.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.builders.foreach { case (name, f) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, name),
-        args => ColumnBridge.expression(f(args.map(ColumnBridge.column)))))
-    }
-    // the non-builder registrations registerAll also makes
-    Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)](
-      ("meta", GraftFunctions.metaBuilder _),
-      ("get_keyed_state", args => graft.functions.GetKeyedStateExpr(args)),
-      ("accumulateWordCount", args => graft.functions.AccumulateWordCountExpr(args)),
-      ("delay", args => graft.functions.DelayExpr(args))
-    ).foreach { case (name, b) =>
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.registrations.foreach { case (name, b) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
         b))
     }
-  }
 }

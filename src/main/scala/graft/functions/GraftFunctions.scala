@@ -19,7 +19,10 @@ import org.apache.spark.sql.graft.{ColumnBridge, RegistryBridge}
   */
 object GraftFunctions {
 
-  private def lift(f: Seq[Column] => Column): Seq[Expression] => Expression =
+  /** A SQL function body: argument expressions → its expression. */
+  type Builder = Seq[Expression] => Expression
+
+  private def lift(f: Seq[Column] => Column): Builder =
     args => ColumnBridge.expression(f(args.map(ColumnBridge.column)))
 
   /** name → column composition. */
@@ -310,28 +313,33 @@ object GraftFunctions {
     }
   }
 
+  /** Every rule-SQL function, name → Expression builder: the codegen
+    * [[builders]] table plus the specially-built forms. The one list
+    * [[registerAll]], `graft.GraftExtensions` and
+    * `rules.Metadata.functionNames` read; a later entry of a name wins.
+    */
+  val registrations: Seq[(String, Builder)] =
+    builders.toSeq.map { case (name, f) => (name, lift(f)) } ++ Seq[(String, Builder)](
+      ("meta", metaBuilder),
+      ("get_keyed_state", args => GetKeyedStateExpr(args)),
+      ("accumulateWordCount", args => AccumulateWordCountExpr(args)),
+      ("delay", args => DelayExpr(args)),
+      ("normalize_text", args => NormalizeTextExpr(args.head)),
+      // keyword_tag(text, 'p1;p2;...'): Aho-Corasick multi-pattern tag;
+      // the pattern list must be a literal (it builds the automaton)
+      ("keyword_tag", {
+        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(pats, _)) =>
+          val list = pats.toString.split(';').map(_.trim).filter(_.nonEmpty).toSeq
+          AcTagExpr(t, new AcAutomaton(list))
+        case _ => throw new IllegalArgumentException(
+          "keyword_tag(text, 'p1;p2;...') — patterns must be a string literal")
+      })) ++ sketchBuilders
+
   /** Register every eKuiper-named function on the session. Idempotent;
     * RuleEngine calls this so rule SQL has the full surface.
     */
-  def registerAll(spark: SparkSession): Unit = {
-    builders.foreach { case (name, f) => RegistryBridge.register(spark, name, lift(f)) }
-    RegistryBridge.register(spark, "meta", metaBuilder)
-    RegistryBridge.register(spark, "get_keyed_state", args => GetKeyedStateExpr(args))
-    RegistryBridge.register(spark, "accumulateWordCount", args => AccumulateWordCountExpr(args))
-    RegistryBridge.register(spark, "delay", args => DelayExpr(args))
-    registerSketches(spark)
-    RegistryBridge.register(spark, "normalize_text",
-      { args => NormalizeTextExpr(args.head) })
-    // keyword_tag(text, 'p1;p2;...'): Aho-Corasick multi-pattern tag;
-    // the pattern list must be a literal (it builds the automaton)
-    RegistryBridge.register(spark, "keyword_tag", {
-      case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(pats, _)) =>
-        val list = pats.toString.split(';').map(_.trim).filter(_.nonEmpty).toSeq
-        AcTagExpr(t, new AcAutomaton(list))
-      case _ => throw new IllegalArgumentException(
-        "keyword_tag(text, 'p1;p2;...') — patterns must be a string literal")
-    })
-  }
+  def registerAll(spark: SparkSession): Unit =
+    registrations.foreach { case (name, b) => RegistryBridge.register(spark, name, b) }
 
   /** The sketch aggregates as rule-SQL names, each one builder over a
     * Spark built-in (the analyzer resolves the aggregate inside it).
@@ -345,7 +353,7 @@ object GraftFunctions {
     *    Greenwald-Khanna is deterministic for a fixed input order.
     *  - `topk_sketch(x, cap, k)`: [[topkSketch]].
     */
-  private def registerSketches(spark: SparkSession): Unit = {
+  private def sketchBuilders: Seq[(String, Builder)] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.NumericType
     // SQL numeric literals arrive as int/bigint/decimal/double
@@ -359,24 +367,25 @@ object GraftFunctions {
     def litInt(e: Expression, what: String): Int = litDouble(e, what).toInt
     def hll(e: Expression, p: Int): Expression =
       ColumnBridge.expression(hllDistinct(ColumnBridge.column(e), p))
-    RegistryBridge.register(spark, "hll_distinct", {
-      case Seq(e) => hll(e, 14)
-      case Seq(e, p) => hll(e, litInt(p, "precision"))
-      case _ => throw new IllegalArgumentException("hll_distinct(col[, precision])")
-    })
-    RegistryBridge.register(spark, "tdigest_quantiles", {
-      case e +: acc +: qs if qs.nonEmpty => ColumnBridge.expression(percentile_approx(
-        ColumnBridge.column(e).cast("double"),
-        array(qs.map(q => lit(litDouble(q, "quantile"))): _*),
-        lit(litInt(acc, "accuracy"))))
-      case _ => throw new IllegalArgumentException(
-        "tdigest_quantiles(col, accuracy, q1[, q2, ...])")
-    })
-    RegistryBridge.register(spark, "topk_sketch", {
-      case Seq(e, cap, k) => ColumnBridge.expression(topkSketch(
-        ColumnBridge.column(e), litInt(cap, "capacity"), litInt(k, "k")))
-      case _ => throw new IllegalArgumentException("topk_sketch(col, capacity, k)")
-    })
+    Seq[(String, Builder)](
+      ("hll_distinct", {
+        case Seq(e) => hll(e, 14)
+        case Seq(e, p) => hll(e, litInt(p, "precision"))
+        case _ => throw new IllegalArgumentException("hll_distinct(col[, precision])")
+      }),
+      ("tdigest_quantiles", {
+        case e +: acc +: qs if qs.nonEmpty => ColumnBridge.expression(percentile_approx(
+          ColumnBridge.column(e).cast("double"),
+          array(qs.map(q => lit(litDouble(q, "quantile"))): _*),
+          lit(litInt(acc, "accuracy"))))
+        case _ => throw new IllegalArgumentException(
+          "tdigest_quantiles(col, accuracy, q1[, q2, ...])")
+      }),
+      ("topk_sketch", {
+        case Seq(e, cap, k) => ColumnBridge.expression(topkSketch(
+          ColumnBridge.column(e), litInt(cap, "capacity"), litInt(k, "k")))
+        case _ => throw new IllegalArgumentException("topk_sketch(col, capacity, k)")
+      }))
   }
 
   /** Estimated number of distinct non-NULL values of `x`, which may be

@@ -490,8 +490,8 @@ object Dedup {
     *     (Spark's own BloomFilterAggregate — partial-agg, driver gets
     *     only the compact bitset, the same sketch Spark injects for
     *     runtime row filtering);
-    *  2. the batch is pruned map-side with BloomFilterMightContain
-    *     (codegen): rows the filter rejects are definitely new;
+    *  2. the batch is pruned map-side with [[BloomShardMightContain]]:
+    *     rows the filter rejects are definitely new;
     *  3. the (small) bloom-positive candidate hash set is BROADCAST
     *     against a second corpus scan — a map-only semi-join — to
     *     strip false positives; confirmed-duplicate hashes come back
@@ -499,45 +499,34 @@ object Dedup {
     *
     * Total cost at 100 TB: two corpus scans, zero corpus shuffles,
     * batch map-only. `expectedItems`/`fpp` size the filter: 1e9 docs
-    * at 1% fpp ≈ 1.2 GiB of driver/broadcast memory — beyond that,
-    * set `nShards` > 1: the corpus trains one filter per hash-prefix
-    * shard in a single grouped pass (`pmod(hash, nShards)` is a pure
-    * function of the content hash), so no single aggregation row ever
-    * holds the whole bitset — partial filters distribute across tasks
-    * by shard, each collected blob is 1/nShards the size, and the
-    * batch probes exactly its own shard's filter. Collision caveat:
-    * "same 64-bit xxhash" stands in for "same content"; at 2^64 that
-    * is the standard trade the exact pipeline ([[exact]]) also makes.
+    * at 1% fpp ≈ 1.2 GiB of driver/broadcast memory, which a broadcast
+    * ships (never the plan, which stays a few KB at any filter size).
+    * Beyond that, set `nShards` > 1: the corpus trains one filter per
+    * hash-prefix shard in a single grouped pass (`pmod(hash, nShards)`
+    * is a pure function of the content hash), so no single aggregation
+    * row ever holds the whole bitset — partial filters distribute
+    * across tasks by shard, each collected blob is 1/nShards the size,
+    * and the batch repartitions by shard so each task probes exactly
+    * its own shard's filter. Collision caveat: "same 64-bit xxhash"
+    * stands in for "same content"; at 2^64 that is the standard trade
+    * the exact pipeline ([[exact]]) also makes.
     */
   def bloomNewDocs(corpus: DataFrame, batch: DataFrame,
                    textCol: String, expectedItems: Long,
                    fpp: Double = 0.01, nShards: Int = 1): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     val h = xxhash64(col(textCol))
     val filters = bloomFilters(corpus, h, nShards, expectedItems, fpp)
     // an EMPTY corpus builds no filter (Spark's aggregate returns null
     // at cardinality 0) — every batch row is new by definition
     if (filters.isEmpty) return batch
-    val (batchH, might, helpers) =
-      if (nShards == 1)
-        (batch.withColumn("__h", h), bloomMightContain(filters(0L), h), Seq("__h"))
-      else {
-        // the filter blobs ride a BROADCAST (one torrent fetch per
-        // executor), never the serialized plan — a CASE chain of
-        // nShards filter literals shipped every shard to every task
-        // binary. The batch repartitions by shard, so each task's rows
-        // route to (and lazily deserialize) exactly one shard's
-        // filter; a shard absent from the corpus has no filter and its
-        // batch rows are definitely new.
-        val filtersB = corpus.sparkSession.sparkContext.broadcast(filters)
-        val shardH = batch.withColumn("__h", h)
-          .withColumn("__shard", pmod(h, lit(nShards.toLong)))
-          .repartition(nShards, col("__shard"))
-        (shardH, ColumnBridge.column(BloomShardMightContain(filtersB,
-          Seq(ColumnBridge.expression(col("__shard")),
-            ColumnBridge.expression(col("__h"))))), Seq("__h", "__shard"))
-      }
+    // one filter is shard 0 and needs no routing
+    val batchH =
+      if (nShards == 1) batch.withColumn("__h", h).withColumn("__shard", lit(0L))
+      else batch.withColumn("__h", h)
+        .withColumn("__shard", pmod(h, lit(nShards.toLong)))
+        .repartition(nShards, col("__shard"))
+    val might = bloomProbe(corpus, filters, col("__shard"))
     val candidates = batchH.filter(might)
     val confirmed = corpus.select(h.as("__h"))
       .join(broadcast(candidates.select(col("__h")).distinct()), "__h", "left_semi")
@@ -545,18 +534,19 @@ object Dedup {
     candidates
       .join(broadcast(confirmed), Seq("__h"), "left_anti")
       .unionByName(batchH.filter(!might))
-      .drop(helpers: _*)
+      .drop("__h", "__shard")
   }
 
   /** Streaming twin of [[bloomNewDocs]]: `batch` is a STREAMING frame
     * and each micro-batch emits only its corpus-new rows. The Bloom
     * filter is built once at plan time from the static corpus and
-    * rides the plan as a literal; the false-positive strip is a
-    * stream-static LEFT ANTI join against the corpus hash set, which
-    * only the (tiny) bloom-positive slice of each micro-batch enters.
-    * At scale, persist `corpus`'s distinct-hash projection (or point
-    * it at a pre-materialized hash table) so the static side isn't
-    * re-derived per micro-batch.
+    * rides a broadcast, so each micro-batch's plan carries only its
+    * handle; the false-positive strip is a stream-static LEFT ANTI
+    * join against the corpus hash set, which only the (tiny)
+    * bloom-positive slice of each micro-batch enters. At scale,
+    * persist `corpus`'s distinct-hash projection (or point it at a
+    * pre-materialized hash table) so the static side isn't re-derived
+    * per micro-batch.
     *
     * Semantics note: within-stream duplicates (two copies arriving in
     * the stream, neither in the corpus) both pass — same as the batch
@@ -568,7 +558,7 @@ object Dedup {
     val h = xxhash64(col(textCol))
     val filters = bloomFilters(corpus, h, 1, expectedItems, fpp)
     if (filters.isEmpty) return batch // empty corpus: all rows are new
-    val might = bloomMightContain(filters(0L), h)
+    val might = bloomProbe(corpus, filters, lit(0L))
     val corpusH = corpus.select(h.as("__h")).distinct()
     val batchH = batch.withColumn("__h", h)
     batchH.filter(might)
@@ -621,14 +611,18 @@ object Dedup {
     }
   }
 
-  /** Map-side probe of one serialized Bloom filter, carried in the plan
-    * as a literal.
+  /** Map-side probe of `__h` against the filter of its `shard`. The
+    * filters ride a BROADCAST (one torrent fetch per executor), never
+    * the serialized plan: as a plan literal a filter grew the plan by
+    * about 8 characters per filter byte, and Spark's SQL status store
+    * kept that text for every execution.
     */
-  private def bloomMightContain(bytes: Array[Byte], h: Column): Column = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+  private def bloomProbe(corpus: DataFrame, filters: Map[Long, Array[Byte]],
+                         shard: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(BloomFilterMightContain(
-      Literal(bytes, org.apache.spark.sql.types.BinaryType), ColumnBridge.expression(h)))
+    val filtersB = corpus.sparkSession.sparkContext.broadcast(filters)
+    ColumnBridge.column(BloomShardMightContain(filtersB,
+      Seq(ColumnBridge.expression(shard), ColumnBridge.expression(col("__h")))))
   }
 
   /** SemDeDup-style semantic near-duplicate detection over an
@@ -674,12 +668,13 @@ object Dedup {
   }
 }
 
-/** Shard-routed Bloom probe for [[Dedup.bloomNewDocs]] with
-  * `nShards > 1`: children are (shard, hash64). The serialized shard
-  * filters live in a broadcast — fetched once per executor, never
-  * serialized into the plan or task binaries — and deserialize lazily
-  * per shard on first probe, so after the batch repartitions by shard
-  * a task materializes exactly the one filter its rows route to.
+/** Shard-routed Bloom probe of [[Dedup.bloomNewDocs]] and
+  * [[Dedup.bloomNewDocsStream]]: children are (shard, hash64), and one
+  * filter is shard 0. The serialized shard filters live in a broadcast
+  * — fetched once per executor, never serialized into the plan or task
+  * binaries — and deserialize lazily per shard on first probe, so after
+  * the batch repartitions by shard a task materializes exactly the one
+  * filter its rows route to.
   * Returns null on null input like BloomFilterMightContain; a shard
   * with no filter (no corpus rows hashed there) probes false.
   */

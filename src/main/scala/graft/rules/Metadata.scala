@@ -88,14 +88,9 @@ object Metadata {
     Component("edgex", "EdgeX bus connection", Seq("server", "messageType")),
     Component("redis", "redis server connection", Seq("addr")))
 
-  /** Rule-SQL function inventory: the codegen builder table plus the
-    * specially-registered forms (GraftFunctions.registerAll).
-    */
+  /** Rule-SQL function inventory (GraftFunctions.registrations). */
   def functionNames: Seq[String] =
-    (graft.functions.GraftFunctions.builders.keys.toSeq ++ Seq(
-      "meta", "get_keyed_state", "accumulateWordCount", "delay",
-      "normalize_text", "keyword_tag", "hll_distinct",
-      "tdigest_quantiles", "topk_sketch")).distinct.sorted
+    graft.functions.GraftFunctions.registrations.map(_._1).distinct.sorted
 
   private def summaryJson(c: Component): JValue = JObject(
     "name" -> JString(c.name), "about" -> JString(c.about),

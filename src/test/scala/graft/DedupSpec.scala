@@ -353,6 +353,27 @@ class DedupSpec extends SparkSuite {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"corpus must not hash-shuffle:\n$plan")
     assert(plan.contains("might_contain"), s"expected the bloom probe in the plan:\n$plan")
+    // one filter needs no shard routing, and it rides a broadcast like
+    // the sharded filters: its ~12 KB as a plan literal would blow the
+    // plan string past the sharded test's bound
+    assert(!plan.contains("hashpartitioning(__shard"), s"one filter needs no routing:\n$plan")
+    assert(plan.length < 50000,
+      s"plan string suspiciously large (${plan.length}) — filter blob embedded?")
+  }
+
+  test("bloom dedup keeps the filter out of the plan text the driver retains") {
+    val corpus = docs.where(col("doc_id") % 10 =!= 0)
+    val batch = docs.where(col("doc_id") % 10 === 0)
+    // Spark's SQL status store keeps each execution's plan description;
+    // a filter riding the plan as a literal adds ~8 characters per
+    // filter byte (~12 KB here) to every execution that probes it
+    val (n, perExecution) = retainedPlanChars {
+      (1 to 3).foreach(_ =>
+        Dedup.bloomNewDocs(corpus, batch, "text", expectedItems = 10000).collect())
+    }
+    assert(n >= 3, s"expected an execution per run, got $n")
+    assert(perExecution < 20000,
+      s"$perExecution plan characters retained per execution — filter blob embedded?")
   }
 
   /** Deterministic synthetic embeddings: `groups` well-separated base

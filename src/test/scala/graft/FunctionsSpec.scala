@@ -472,6 +472,23 @@ class FunctionsSpec extends SparkSuite {
     assert(fresh.sql("SELECT accumulateWordCount('a b', ' ')").first().getLong(0) > 0)
   }
 
+  test("every rule-SQL function resolves in a GraftExtensions session") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val fresh = spark.newSession()
+    org.apache.spark.sql.graft.RegistryBridge.applyExtensions(ext, fresh)
+    val names = graft.rules.Metadata.functionNames
+    val missing = names.filterNot(fresh.catalog.functionExists)
+    assert(missing.isEmpty, s"listed but not injected: ${missing.mkString(", ")}")
+    // the specially-built forms evaluate, not only resolve
+    val r = fresh.sql(
+      """SELECT hll_distinct(x), normalize_text(' A  b '),
+        |  topk_sketch(x, 8, 1)[0].item, tdigest_quantiles(x, 100, 0.5)[0]
+        |FROM VALUES (1), (2), (2) AS t(x)""".stripMargin).first()
+    assert(r.getLong(0) == 2L && r.getString(2) == "2" && r.getDouble(3) == 2.0)
+    assert(fresh.sql("SELECT keyword_tag('a cat', 'cat;dog')").first().get(0) != null)
+  }
+
   test("nondeterministic functions: shape and bounds") {
     GraftFunctions.registerAll(spark)
     val rows = spark.range(100)

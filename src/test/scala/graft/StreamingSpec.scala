@@ -67,10 +67,18 @@ class StreamingSpec extends SparkSuite {
     val q = out.writeStream.format("memory").queryName("bloom_out")
       .outputMode(OutputMode.Append).start()
     try {
-      val (first, second) = rows.splitAt(rows.length / 2)
+      val (first, rest) = rows.splitAt(rows.length / 3)
       ms.addData(first.toSeq); q.processAllAvailable()
       val afterOne = spark.table("bloom_out").count()
-      ms.addData(second.toSeq); q.processAllAvailable()
+      // the filter rides a broadcast, not each micro-batch's plan: the
+      // plan text the driver retains per batch stays small
+      val (batches, perExecution) = retainedPlanChars {
+        rest.grouped(rest.length / 2 + 1).foreach { part =>
+          ms.addData(part.toSeq); q.processAllAvailable()
+        }
+      }
+      assert(batches >= 2 && perExecution < 20000,
+        s"$perExecution plan characters retained per execution over $batches — filter embedded?")
       val got = spark.table("bloom_out").select("doc_id")
         .collect().map(_.getLong(0)).sorted
       val want = Dedup.bloomNewDocs(corpus, batchDf, "text", expectedItems = 10000)
