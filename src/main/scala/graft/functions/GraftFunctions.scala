@@ -297,7 +297,7 @@ object GraftFunctions {
     * key name, exactly the reference's parse rule. meta() with no args
     * returns the whole map.
     */
-  private[graft] def metaBuilder(args: Seq[Expression]): Expression = {
+  private def metaBuilder(args: Seq[Expression]): Expression = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.Literal
     val metaCol = ColumnBridge.column(UnresolvedAttribute("__meta"))
@@ -316,7 +316,7 @@ object GraftFunctions {
   /** Every rule-SQL function, name → Expression builder: the codegen
     * [[builders]] table plus the specially-built forms. The one list
     * [[registerAll]], `graft.GraftExtensions` and
-    * `rules.Metadata.functionNames` read; a later entry of a name wins.
+    * `rules.Metadata.functionNames` read.
     */
   val registrations: Seq[(String, Builder)] =
     builders.toSeq.map { case (name, f) => (name, lift(f)) } ++ Seq[(String, Builder)](

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StatusStoreProbe
 
 /** Planted-duplicate contracts for the dedup operators (SURVEY §2.9):
   * the LSH paths must recover perturbed copies, and the codegen
@@ -367,7 +368,7 @@ class DedupSpec extends SparkSuite {
     // Spark's SQL status store keeps each execution's plan description;
     // a filter riding the plan as a literal adds ~8 characters per
     // filter byte (~12 KB here) to every execution that probes it
-    val (n, perExecution) = retainedPlanChars {
+    val (n, perExecution) = StatusStoreProbe.retainedPlanChars(spark) {
       (1 to 3).foreach(_ =>
         Dedup.bloomNewDocs(corpus, batch, "text", expectedItems = 10000).collect())
     }

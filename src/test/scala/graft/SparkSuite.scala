@@ -12,18 +12,6 @@ trait SparkSuite extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
   /** A fresh temporary directory, deleted when the JVM exits. */
   def tempDir(prefix: String): java.nio.file.Path = TempDirs.create(prefix)
-
-  /** The executions `body` adds to the session's SQL status store and
-    * the mean length of their physical-plan descriptions — text the
-    * driver keeps for every execution it retains.
-    */
-  def retainedPlanChars(body: => Unit): (Int, Long) = {
-    import org.apache.spark.sql.graft.StatusStoreProbe
-    val last = StatusStoreProbe.planChars(spark).keys.maxOption.getOrElse(-1L)
-    body
-    val added = StatusStoreProbe.planChars(spark).filter(_._1 > last).values
-    (added.size, if (added.isEmpty) 0L else added.map(_.toLong).sum / added.size)
-  }
 }
 
 object SparkSuite {

@@ -3,6 +3,7 @@ package graft
 import graft.streaming._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StatusStoreProbe
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming window semantics (SURVEY §2.2): every streaming operator
@@ -72,7 +73,7 @@ class StreamingSpec extends SparkSuite {
       val afterOne = spark.table("bloom_out").count()
       // the filter rides a broadcast, not each micro-batch's plan: the
       // plan text the driver retains per batch stays small
-      val (batches, perExecution) = retainedPlanChars {
+      val (batches, perExecution) = StatusStoreProbe.retainedPlanChars(spark) {
         rest.grouped(rest.length / 2 + 1).foreach { part =>
           ms.addData(part.toSeq); q.processAllAvailable()
         }
