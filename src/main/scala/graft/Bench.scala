@@ -1,6 +1,22 @@
 package graft
 
-/** Per-round benchmark: times every SparkEntry query at the given SF.
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{DataSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, V2TableWriteExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.json4s.JsonAST.{JDouble, JInt, JObject, JString}
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{pretty, render}
+
+/** The measurement main: times every SparkEntry query at the given SF
+  * (`SPARK_GRAFT_SF_DIR`, default sf0.1), or the subset
+  * `SPARK_GRAFT_QUERIES` names (see [[SparkEntry.selected]]).
   * Each query is fully evaluated through a noop sink (count() lets
   * Catalyst prune unevaluated projections, under-measuring projection
   * queries). One warm-up query absorbs JVM/classloader/parquet-footer
@@ -14,6 +30,15 @@ package graft
   * r22 — one compact summary line LAST (total/failed/n/slowest-10)
   * sized to always fit the harness's ~2 kB stdout tail whole; the
   * full record also lands in $SPARK_GRAFT_BENCH_OUT when set.
+  *
+  * After the timed passes, one untimed profiled run per query (see
+  * [[profile]]) writes the per-query record `bench_last.json` to the
+  * working directory: the timed median `time_s` (absent if every timed
+  * run failed), an `error` if the profiled run failed, else the
+  * construct / plan / exec phases with their seconds, jobs, stages,
+  * tasks and spilled bytes, and operator counts of the plan the write
+  * ran after AQE re-planned it. That plan's text goes to
+  * `bench_plans/<query>.txt`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -27,12 +52,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // Optional subset (comma-separated names) — used by the scale
-    // rehearsal to time just the expensive queries at sf1.
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => subset.forall(_.contains(n)))
+    val names = SparkEntry.selected()
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toIntOption.getOrElse(3).max(1)
     // warm-up (untimed): one agg query touching the biggest table
     try runOnce(names.find(_ == "q_agg").getOrElse(names.head))
@@ -132,6 +152,93 @@ object Bench {
         System.err.println(s"[bench] could not write $p: ${e.getMessage}")
       }
     }
+
+    // the per-query record: one untimed, profiled run of each query
+    val t0 = System.nanoTime()
+    val plansDir = new java.io.File("bench_plans")
+    org.apache.commons.io.FileUtils.deleteQuietly(plansDir)
+    plansDir.mkdirs()
+    val timed = results.toMap
+    val record = names.map { name =>
+      resetStorage()
+      val run =
+        try {
+          val p = profile(spark, sfDir, name)
+          Files.writeString(plansDir.toPath.resolve(s"$name.txt"), p.planText)
+          p.json
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name profiled run FAILED: ${e.getMessage}")
+          JObject("error" -> JString(String.valueOf(e.getMessage)))
+        }
+      val time = if (timed(name) >= 0) List("time_s" -> JDouble(round4(timed(name)))) else Nil
+      name -> (JObject(time) ~ run)
+    }
+    val json = ("sf" -> sfDir) ~ ("cores" -> spark.sparkContext.defaultParallelism) ~
+      ("runs" -> runs) ~ ("profile_s" -> round4((System.nanoTime() - t0) / 1e9)) ~
+      ("queries" -> JObject(record.toList))
+    Files.writeString(Paths.get("bench_last.json"), pretty(render(json)) + "\n")
     spark.stop()
+  }
+
+  private def round4(v: Double): Double = math.round(v * 1e4) / 1e4
+
+  /** One profiled run of a query: the seconds and Spark work of its
+    * phases, and the plan its noop write ran, which holds AQE's final plan
+    * (`isFinalPlan=true`).
+    */
+  final case class Profiled(construct: JobCounter.Counts, plan: JobCounter.Counts,
+                            exec: JobCounter.Counts, finalPlan: SparkPlan) {
+    lazy val planText: String = finalPlan.toString
+    private def phase(c: JobCounter.Counts): JObject = ("s" -> round4(c.seconds)) ~
+      ("jobs" -> c.jobs) ~ ("stages" -> c.stages) ~ ("tasks" -> c.tasks) ~ ("spill_bytes" -> c.spillBytes)
+    def json: JObject =
+      ("construct" -> phase(construct)) ~ ("plan" -> phase(plan)) ~ ("exec" -> phase(exec)) ~
+        JObject(Census(finalPlan).map { case (k, v) => k -> JInt(v) }.toList) ~
+        ("plan_chars" -> planText.length)
+  }
+
+  /** Runs query `name` once, untimed, in three phases: construct (build
+    * the DataFrame, including the jobs its operators run), plan (Catalyst
+    * to `executedPlan`) and exec (the noop write). The write builds its
+    * own `QueryExecution`, so its final plan is taken from a listener:
+    * `df.queryExecution` keeps the initial adaptive plan.
+    */
+  def profile(spark: SparkSession, sfDir: String, name: String): Profiled = {
+    val written = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.isInstanceOf[V2TableWriteExec]) written.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val sc = spark.sparkContext
+      val (df, construct) = JobCounter(sc)(SparkEntry.queries(name)(spark, sfDir))
+      val (_, plan) = JobCounter(sc)(df.queryExecution.executedPlan)
+      val (_, exec) = JobCounter(sc)(df.write.format("noop").mode("overwrite").save())
+      val qe = Option(written.poll(60, TimeUnit.SECONDS))
+        .getOrElse(sys.error("the write's plan did not arrive within 60 s"))
+      Profiled(construct, plan, exec, qe.executedPlan)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Operator counts of a plan, through adaptive query stages and
+    * subqueries. `exchanges` counts shuffle and broadcast exchanges, as
+    * perfbench's `exec.exchanges` does; a reused exchange is not one.
+    */
+  private object Census extends AdaptiveSparkPlanHelper {
+    def apply(plan: SparkPlan): Seq[(String, Int)] = {
+      val nodes = collectWithSubqueries(plan) { case p => p }
+      def n(pf: PartialFunction[SparkPlan, Unit]): Int = nodes.count(pf.isDefinedAt)
+      Seq(
+        "scans" -> n { case _: DataSourceScanExec | _: BatchScanExec => },
+        "exchanges" -> n { case _: Exchange => },
+        "reused_exchanges" -> n { case _: ReusedExchangeExec => },
+        "broadcast_exchanges" -> n { case _: BroadcastExchangeLike => },
+        "broadcast_hash_joins" -> n { case _: BroadcastHashJoinExec => },
+        "sort_merge_joins" -> n { case _: SortMergeJoinExec => },
+        "shuffled_hash_joins" -> n { case _: ShuffledHashJoinExec => },
+        "aqe_shuffle_reads" -> n { case _: AQEShuffleReadExec => })
+    }
   }
 }

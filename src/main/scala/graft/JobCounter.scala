@@ -7,8 +7,9 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Counts the Spark jobs, stages, tasks and spilled bytes that a block of
-  * code runs: the jobs submitted from its thread, or from any thread that
-  * carries its SparkContext local properties, and no one else's.
+  * code runs, and times it: the jobs submitted from its thread, or from
+  * any thread that carries its SparkContext local properties, and no one
+  * else's.
   *
   * The listener bus delivers events asynchronously, so when the block
   * returns some of its jobs may not have reached a listener yet. The
@@ -18,7 +19,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * left it running in the background (an error), to end.
   */
 object JobCounter {
-  final case class Counts(jobs: Int, stages: Int, tasks: Int, spillBytes: Long)
+  final case class Counts(jobs: Int, stages: Int, tasks: Int, spillBytes: Long, seconds: Double)
 
   private val Key = "graft.jobCounter"
   private val SettleTimeoutS = 60L
@@ -58,13 +59,15 @@ object JobCounter {
     }
     sc.addSparkListener(listener)
     try {
+      val t0 = System.nanoTime()
       val result = tagged(tag)(body)
+      val seconds = (System.nanoTime() - t0) / 1e9
       tagged(s"$tag/fence")(sc.parallelize(Seq(0), 1).count())
       require(fenceEnded.await(SettleTimeoutS, TimeUnit.SECONDS),
         s"listener bus did not deliver the fence job's end within $SettleTimeoutS s")
       require(ended.get == jobs.size,
         s"${jobs.size - ended.get} of ${jobs.size} counted jobs still running")
-      (result, Counts(jobs.size, stages.get, tasks.get, spill.get))
+      (result, Counts(jobs.size, stages.get, tasks.get, spill.get, seconds))
     } finally sc.removeSparkListener(listener)
   }
 }

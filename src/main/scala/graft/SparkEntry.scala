@@ -31,6 +31,19 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.iterator.map(_._1).reduce(_ ++ _)
 
+  /** The query names `SPARK_GRAFT_QUERIES=q_a,q_b` selects, sorted, or
+    * every query when it is unset or blank: the subset [[Bench]] and
+    * [[Verify]] run. A name that is not a query is an error, so a typo
+    * cannot pass for a run over fewer queries.
+    */
+  def selected(subset: Option[String] = sys.env.get("SPARK_GRAFT_QUERIES")): Seq[String] = {
+    val all = queries.keySet
+    val names = subset.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).distinct
+    val unknown = names.filterNot(all)
+    require(unknown.isEmpty, s"SPARK_GRAFT_QUERIES names no query: ${unknown.mkString(", ")}")
+    (if (names.isEmpty) all.toSeq else names).sorted
+  }
+
   /** For each key in queries, equivalent SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

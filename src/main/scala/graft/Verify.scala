@@ -1,29 +1,21 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * `SPARK_GRAFT_QUERIES=q_a,q_b` limits a local run to those queries
+  * ([[SparkEntry.selected]]); the driver never sets it. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val names = SparkEntry.selected()
     val spark = LocalSession(LocalSession.cpus("4"))
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b runs just those
-    // queries (the driver never sets it, so its runs stay exhaustive)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty)
-        System.err.println(s"[verify] SPARK_GRAFT_ONLY names not in queries " +
-          s"(typo?): ${unknown.toSeq.sorted.mkString(", ")}")
-      System.err.println(s"[verify] FILTERED run: ${names.size - unknown.size} " +
+    if (names.size < SparkEntry.queries.size)
+      System.err.println(s"[verify] FILTERED run: ${names.size} " +
         s"of ${SparkEntry.queries.size} queries — outDir will hold a PARTIAL " +
         "result set; don't point the driver (or check.py baselines) at it")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -50,7 +42,7 @@ object Verify {
     val sfName = Paths.get(sfDir).getFileName.toString
     Goldens.expected.get(sfName).filter(_.nonEmpty).foreach { golden =>
       val entries = Goldens.rowsOnly.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
+        .filter { case (name, _) => names.contains(name) }
         .map { case (name, (exclude, dp)) =>
         val entry =
           try {
